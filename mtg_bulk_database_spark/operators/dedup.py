@@ -600,36 +600,38 @@ def _signature_from_hashes(
     return sig_udf(hashes)
 
 
-def minhash_signature(sh: Column, num_perm: int = 64, seed: int = 13) -> Column:
+def minhash_signature(
+    sh: Column, num_perm: int = 64, seed: int = 13, portable: bool = False
+) -> Column:
     """num_perm-wide MinHash signature of a shingle array.
 
     Universal hashing over a bounded base hash: h_i(s) = (aᵢ·x + bᵢ) mod p
-    with x = xxhash64(s) mod p — all arithmetic stays < 2⁶², so the
+    with x = base(s) mod p — all arithmetic stays < 2⁶², so the
     expression is safe under ANSI mode and identical on every executor.
+    The base hash is ``xxhash64`` by default (one 64-bit mix; works for
+    string and int64 hashed shingles alike).  ``portable=True`` swaps in
+    :func:`md5_60`, which has an exact SQL twin in any engine with
+    md5() — the family to run when a DIFFERENT system (DuckDB
+    spot-checker, a Trino verifier, a vendor migration) must reproduce
+    signatures bit-for-bit; ~2-3× slower per shingle.
     """
     # base-hash every shingle ONCE, then each permutation is pure integer
     # arithmetic over the bound hash array (64 perms × cheap pmod, not
-    # 64 × xxhash64 re-evaluations). Works for string shingles and for
-    # int64 hashed shingles alike (hashing an 8-byte int is ~free next
-    # to a 20-char string).
-    hashes = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_31)))
+    # 64 × base-hash re-evaluations)
+    base = md5_60 if portable else F.xxhash64
+    hashes = F.transform(sh, lambda s: F.pmod(base(s), F.lit(_MERSENNE_31)))
     return _signature_from_hashes(hashes, num_perm, seed)
 
 
-def minhash_signature_portable(
-    sh: Column, num_perm: int = 64, seed: int = 13
-) -> Column:
-    """:func:`minhash_signature` with the md5-derived base hash: the
-    same banding math, but every stage has an exact SQL twin in any
-    engine with md5() — the variant you run when a DIFFERENT system
-    (DuckDB spot-checker, a Trino verifier, a vendor migration) must
-    reproduce signatures bit-for-bit.  ~2-3× slower per shingle than
-    xxhash64 (md5 + hex decode vs one 64-bit mix); the default stays
-    xxhash64 for production throughput."""
-    hashes = F.transform(
-        sh, lambda s: F.pmod(md5_60(s), F.lit(_MERSENNE_31))
-    )
-    return _signature_from_hashes(hashes, num_perm, seed)
+def _band_bucket(sig: Column, i: int, rows: int, portable: bool) -> Column:
+    """Bucket id of band ``i`` (signature slots ``i·rows+1 … (i+1)·rows``):
+    ``xxhash64`` of the slice, or — portable — :func:`md5_60` of the
+    slice rendered as a ``v1-v2-…`` string, reproducible in any engine
+    with md5()."""
+    band = F.slice(sig, i * rows + 1, rows)
+    if not portable:
+        return F.xxhash64(band)
+    return md5_60(F.concat_ws("-", F.transform(band, lambda x: x.cast("string"))))
 
 
 def minhash_lsh_pairs(
@@ -641,42 +643,53 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 13,
-    hashed_shingles_df: DataFrame | None = None,
+    shingles_df: DataFrame | None = None,
+    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash candidates, then Jaccard
-    verification of candidates over hashed shingles.
+    verification of candidates.
 
     With 64 perms in 16 bands of 4 rows, a pair at s=0.8 is a candidate
     with p ≈ 0.9998; misses are possible by construction (documented
-    approximate recall). The verify step computes jaccard on int64
-    hashed shingles, so a false positive requires an xxhash64 collision
-    within one document pair's shingle sets (P ≈ n²/2⁶⁴ — negligible
-    but not zero; the string-exact zero-FP guarantee lives in
-    :func:`ngram_jaccard_pairs`).
+    approximate recall).  Candidates come from the (band, bucket)
+    equi-join, never all-pairs.
+
+    ``portable`` picks the hash family, never the plan shape:
+
+    - default: int64 hashed shingles (:func:`with_hashed_shingles`),
+      xxhash64 base hash and band buckets.  Fastest (no per-shingle
+      string allocation: only shingle identity matters); the verify step
+      compares int64 hashes, so a false positive requires an xxhash64
+      collision within one document pair's shingle sets (P ≈ n²/2⁶⁴ —
+      negligible but not zero; the string-exact zero-FP guarantee lives
+      in :func:`ngram_jaccard_pairs`).
+    - ``portable=True``: STRING shingles (:func:`with_shingles`), md5
+      base hash and band buckets — every stage (signatures → buckets →
+      candidate equi-join → exact-Jaccard verify) is reproducible in any
+      engine with ``md5()``, so the whole banded plan hash-checks
+      against a DuckDB twin (q177).
+
+    ``shingles_df`` is a prebuilt ``(id_col, shingles)`` table of the
+    matching kind (hashed for the default, string for portable).
     """
     rows = num_perm // bands
+    if shingles_df is None:
+        build = with_shingles if portable else with_hashed_shingles
+        shingles_df = build(df, text_col, id_col, k)
     # materialized once: the signature frame feeds the band explode and
-    # both exact-verify branches (see ngram_jaccard_pairs note).
-    # Hashed (int64) shingles: the approximate path only needs shingle
-    # identity, so it skips per-shingle string allocation — measured
-    # ~35% off the dominant shingle-build stage at sf0.1.
-    base = (
-        hashed_shingles_df
-        if hashed_shingles_df is not None
-        else with_hashed_shingles(df, text_col, id_col, k)
-    )
-    # the checkpoint still materializes the SIGNATURES once (they feed
-    # the band explode + both verify branches); with a prebuilt shingle
-    # table it recomputes only the cheap signature projection
-    sh = base.withColumn(
-        "sig", minhash_signature(F.col("shingles"), num_perm, seed)
+    # both exact-verify branches (see ngram_jaccard_pairs note); with a
+    # prebuilt shingle table it recomputes only the signature projection
+    sh = shingles_df.withColumn(
+        "sig", minhash_signature(F.col("shingles"), num_perm, seed, portable)
     ).localCheckpoint(eager=False)
     band_cols = F.explode_outer(  # _outer: see ngram_jaccard_pairs note
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("band"),
-                    F.xxhash64(F.slice("sig", i * rows + 1, rows)).alias("bucket"),
+                    _band_bucket(F.col("sig"), i, rows, portable).alias(
+                        "bucket"
+                    ),
                 )
                 for i in range(bands)
             ]
@@ -704,107 +717,11 @@ def minhash_lsh_pairs(
     sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     # |A∪B| = |A|+|B|−|A∩B| for the distinct-element arrays every
     # shingle builder emits (array_distinct at construction), so ONE
-    # hash-set pass per candidate replaces intersect+union (r11, guide
-    # §1.2 per-task work; integer counts → identical double).  The
-    # hoisted `_common` column is referenced twice, which blocks
-    # CollapseProject from inlining (non-cheap expr) — array_intersect
-    # evaluates once, same discipline as q223's named score arrays.
-    verified = (
-        cand.join(sh_a, on="id_a")
-        .join(sh_b, on="id_b")
-        .withColumn(
-            "_common", F.size(F.array_intersect("sh_a", "sh_b"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("_common").cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("_common")),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    seed: int = 13,
-    shingles_df: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`minhash_lsh_pairs` on the engine-portable hash family:
-    md5-derived base hashes (:func:`md5_60`) over STRING shingles, and
-    band buckets hashed from the band's signature slice rendered as a
-    ``v1-v2-…`` string — every stage reproducible in any engine with
-    ``md5()``, so the WHOLE banded plan (signatures → buckets →
-    candidate equi-join → exact-Jaccard verify) hash-checks against a
-    DuckDB twin instead of relying on local recall pins.  Identical
-    shuffle shape to the xxhash64 default: candidates come from the
-    (band, bucket) equi-join, never all-pairs."""
-    rows = num_perm // bands
-    base = (
-        shingles_df
-        if shingles_df is not None
-        else with_shingles(df, text_col, id_col, k)
-    )
-    sh = base.withColumn(
-        "sig",
-        minhash_signature_portable(F.col("shingles"), num_perm, seed),
-    ).localCheckpoint(eager=False)  # feeds band explode + both verifies
-
-    def band_bucket(i: int) -> Column:
-        slice_str = F.concat_ws(
-            "-",
-            F.transform(
-                F.slice("sig", i * rows + 1, rows),
-                lambda x: x.cast("string"),
-            ),
-        )
-        return md5_60(slice_str)
-
-    band_cols = F.explode_outer(  # _outer: see ngram_jaccard_pairs note
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    band_bucket(i).alias("bucket"),
-                )
-                for i in range(bands)
-            ]
-        )
-    ).alias("b")
-    buckets = sh.select(F.col(id_col), band_cols).select(
-        id_col, "b.band", "b.bucket"
-    )
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            on=[
-                F.col("x.band") == F.col("y.band"),
-                F.col("x.bucket") == F.col("y.bucket"),
-                F.col(f"x.{id_col}") < F.col(f"y.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"), F.col(f"y.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    # |A∪B| = |A|+|B|−|A∩B| for the distinct-element arrays every
-    # shingle builder emits (array_distinct at construction), so ONE
-    # hash-set pass per candidate replaces intersect+union (r11, guide
-    # §1.2 per-task work; integer counts → identical double).  The
-    # hoisted `_common` column is referenced twice, which blocks
-    # CollapseProject from inlining (non-cheap expr) — array_intersect
-    # evaluates once, same discipline as q223's named score arrays.
+    # hash-set pass per candidate replaces intersect+union (integer
+    # counts → identical double).  The hoisted `_common` column is
+    # referenced twice, which blocks CollapseProject from inlining
+    # (non-cheap expr) — array_intersect evaluates once, same
+    # discipline as q223's named score arrays.
     verified = (
         cand.join(sh_a, on="id_a")
         .join(sh_b, on="id_b")

@@ -146,8 +146,11 @@ def uniform_bucket_histograms(
 #: catalog's lazy-plan memo.  Saves the per-call pyarrow footer walk
 #: (driver-side, ~0.1–0.3 s per q176 build at sf0.1; O(files) at
 #: scale) when the same immutable table is profiled repeatedly in one
-#: process.
+#: process.  Bounded to the ``_FOOTER_MEMO_MAX`` most recent keys
+#: (oldest evicted first); callers always get a copy, so mutating a
+#: returned result never reaches the memo.
 _FOOTER_MEMO: dict = {}
+_FOOTER_MEMO_MAX = 32
 
 
 def footer_bucket_histograms(
@@ -186,7 +189,7 @@ def footer_bucket_histograms(
     except OSError:
         memo_key = None
     if memo_key is not None and memo_key in _FOOTER_MEMO:
-        return _FOOTER_MEMO[memo_key]
+        return {k: list(v) for k, v in _FOOTER_MEMO[memo_key].items()}
     mins: dict = {c: None for c in col_map}
     maxs: dict = {c: None for c in col_map}
     for path in paths:
@@ -219,7 +222,9 @@ def footer_bucket_histograms(
             step = (mx - mn) / k
             out[alias] = sorted({mn + j * step for j in range(1, k)})
     if memo_key is not None:
-        _FOOTER_MEMO[memo_key] = out
+        while len(_FOOTER_MEMO) >= _FOOTER_MEMO_MAX:
+            _FOOTER_MEMO.pop(next(iter(_FOOTER_MEMO)))
+        _FOOTER_MEMO[memo_key] = {k: list(v) for k, v in out.items()}
     return out
 
 

@@ -195,7 +195,7 @@ def q33(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
     return dedup.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, threshold=0.8,
-        hashed_shingles_df=shingle_prebuilt_table(spark, sf_dir, "hashed"),
+        shingles_df=shingle_prebuilt_table(spark, sf_dir, "hashed"),
     )
 
 
@@ -255,9 +255,9 @@ def _q177_oracle(num_perm: int = 64, bands: int = 16, seed: int = 13) -> str:
 @query("q177_minhash_lsh_portable", _q177_oracle())
 def q177(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    return dedup.minhash_lsh_pairs_portable(
+    return dedup.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, threshold=0.8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
+        shingles_df=shingle_prebuilt_table(spark, sf_dir), portable=True,
     )
 
 

@@ -1021,12 +1021,12 @@ def q251(spark, sf_dir):
     lexicographic order, so emitted pairs carry doc_a < doc_b exactly
     like q246; same-document bucket collisions are filtered at the
     end."""
-    from .operators.dedup import minhash_lsh_pairs_portable
+    from .operators.dedup import minhash_lsh_pairs
 
     sh = paragraph_shingles_prebuilt(spark, sf_dir).select(
         _pkey_col().alias("pid"), "shingles"
     )
-    pairs = minhash_lsh_pairs_portable(
+    pairs = minhash_lsh_pairs(
         None,
         "p_text",
         "pid",
@@ -1035,6 +1035,7 @@ def q251(spark, sf_dir):
         bands=_Q251_BANDS,
         seed=_Q251_SEED,
         shingles_df=sh,
+        portable=True,
     )
     # unpack widths MUST track _SQL_PKEY's field widths (19+1+19): the
     # r10 para_idx widening with a stale 9-wide unpack collapsed every

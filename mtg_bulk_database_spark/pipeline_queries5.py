@@ -328,57 +328,48 @@ def _q179_oracle(depth: int = 5, width: int = 1024) -> str:
     GROUP BY t, true_count"""
 
 
+def _cms_heavy_hitters(spark, sf_dir, portable: bool):
+    """Count-min-sketch frequency estimates for the exact top-20
+    tokens: the bounded-memory twin of q100. The sketch is d×w SUM
+    cells (a 5120-row DataFrame at the default ε≈e/1024), built in one
+    explode+groupBy pass and broadcast into the probe join; estimates
+    are ≥ truth by construction with ≤ εN overshoot w.h.p. —
+    test_sketches.py pins both bounds against the exact counts.
+    ``portable`` picks the CMS hash family (see ``sketches.cms_build``)."""
+    from .functions.text import tokens
+    from .operators import sketches
+
+    docs = load_table(spark, sf_dir, "documents")
+    tok = docs.select(F.explode(tokens("text")).alias("t"))
+    sketch = sketches.cms_build(tok, "t", portable=portable)
+    top = (
+        tok.groupBy("t")
+        .agg(F.count("*").alias("true_count"))
+        .orderBy(F.col("true_count").desc(), "t")
+        .limit(20)
+    )
+    return (
+        sketches.cms_estimate(sketch, top, "t", portable=portable)
+        .select("t", "true_count", "est_count")
+        .orderBy(F.col("true_count").desc(), "t")
+    )
+
+
 @query("q179_cms_portable_heavy_hitters", _q179_oracle())
 def q179(spark, sf_dir):
     """q116 on the engine-portable CMS hash family: identical d×w SUM
     sketch and min-cell probe, but every cell index derives from md5 —
     integer-exact end to end, so unlike q116 this one carries a
     value-hash oracle (the sketch-correctness guarantee stops being
-    "trust the local tests" and becomes a driver-checked equality)."""
-    from .functions.text import tokens
-    from .operators import sketches
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(tokens("text")).alias("t"))
-    sketch = sketches.cms_build(tok, "t", portable=True)
-    top = (
-        tok.groupBy("t")
-        .agg(F.count("*").alias("true_count"))
-        .orderBy(F.col("true_count").desc(), "t")
-        .limit(20)
-    )
-    return (
-        sketches.cms_estimate(sketch, top, "t", portable=True)
-        .select("t", "true_count", "est_count")
-        .orderBy(F.col("true_count").desc(), "t")
-    )
+    "trust the local tests" and becomes an oracle-checked equality)."""
+    return _cms_heavy_hitters(spark, sf_dir, portable=True)
 
 
 @query("q116_cms_heavy_hitters")
 def q116(spark, sf_dir):
-    """Count-min-sketch frequency estimates for the exact top-20
-    tokens: the bounded-memory twin of q100. The sketch is d×w SUM
-    cells (a 5120-row DataFrame at the default ε≈e/1024), built in one
-    explode+groupBy pass and broadcast into the probe join; estimates
-    are ≥ truth by construction with ≤ εN overshoot w.h.p. —
-    test_sketches.py pins both bounds against the exact counts."""
-    from .functions.text import tokens
-    from .operators import sketches
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(tokens("text")).alias("t"))
-    sketch = sketches.cms_build(tok, "t")
-    top = (
-        tok.groupBy("t")
-        .agg(F.count("*").alias("true_count"))
-        .orderBy(F.col("true_count").desc(), "t")
-        .limit(20)
-    )
-    return (
-        sketches.cms_estimate(sketch, top, "t")
-        .select("t", "true_count", "est_count")
-        .orderBy(F.col("true_count").desc(), "t")
-    )
+    """:func:`_cms_heavy_hitters` on the default xxhash64 CMS family
+    (rows-only: xxhash64 cells have no DuckDB twin)."""
+    return _cms_heavy_hitters(spark, sf_dir, portable=False)
 
 
 @query("q117_dup_pagerank")

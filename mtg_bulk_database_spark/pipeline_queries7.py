@@ -148,35 +148,33 @@ def q135(spark, sf_dir):
 # operator, as a first-class pipeline query (the number you check
 # BEFORE trusting an approximate pass on a 100 TB corpus).
 # ---------------------------------------------------------------------------
-# r8 (VERDICT r7 directive #1, closing r6 directive #5): the registered
-# gate now runs the PORTABLE md5 MinHash family at the DEPLOYED operating
-# point — (num_perm=32, bands=8), the knee the q166 sweep located — so
-# the single-point eval of the config you'd actually ship hash-checks
-# against DuckDB.  q180 remains the eval at the library default (64, 16);
-# the production xxhash64 leg (minhash_lsh_pairs) keeps its local recall
-# pins in tests/test_dedup.py and its banding behaviour transfers from
-# this gate because recall-vs-banding is hash-family-agnostic (see q166).
-@query("q137_minhash_eval")  # oracle attached below _minhash_eval_oracle
-def q137(spark, sf_dir):
+# The registered gate q137 runs the PORTABLE md5 MinHash family at the
+# DEPLOYED operating point — (num_perm=32, bands=8), the knee the q166
+# sweep located — so the single-point eval of the config you'd actually
+# ship hash-checks against DuckDB.  q180 is the same eval at the library
+# default (64, 16).  The production xxhash64 leg (minhash_lsh_pairs'
+# default) keeps its local recall pins in tests/test_pipeline_ops.py and
+# its banding behaviour transfers from this gate because
+# recall-vs-banding is hash-family-agnostic (see q166).
+def _minhash_eval(spark, sf_dir, num_perm: int, bands: int):
     """Recall/precision of the banded-MinHash near-dup pass against the
     exact n-gram Jaccard operator at the same threshold, evaluated at
-    the DEPLOYED sketch config (num_perm=32, bands=8 — the q166 sweep's
-    knee). Both pair sets are tiny relative to the corpus (pairs, not
-    documents), so the full-outer join is cheap; metrics are integer
-    micro-ratios (single final division semantics, engine-exact). At
-    100 TB you run this on a stratified sample (q83) and ship the
-    sketch parameters only when recall clears the bar."""
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    the sketch config ``(num_perm, bands)``. Both pair sets are tiny
+    relative to the corpus (pairs, not documents), so the full-outer
+    join is cheap; metrics are integer micro-ratios (single final
+    division semantics, engine-exact). At 100 TB you run this on a
+    stratified sample (q83) and ship the sketch parameters only when
+    recall clears the bar."""
     from .pipeline_queries import shingle_prebuilt_table
 
+    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    shingles = shingle_prebuilt_table(spark, sf_dir)
     exact = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", k=3, threshold=0.8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
+        docs, "text", "doc_id", k=3, threshold=0.8, shingles_df=shingles,
     ).select("id_a", "id_b")
-    approx = dedup.minhash_lsh_pairs_portable(
+    approx = dedup.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, threshold=0.8,
-        num_perm=32, bands=8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
+        num_perm=num_perm, bands=bands, shingles_df=shingles, portable=True,
     ).select("id_a", "id_b")
     j = exact.withColumn("in_exact", F.lit(1)).join(
         approx.withColumn("in_approx", F.lit(1)),
@@ -218,6 +216,12 @@ def q137(spark, sf_dir):
         .otherwise(F.lit(0.0))
         .alias("precision_micro"),
     )
+
+
+@query("q137_minhash_eval")  # oracle attached below _minhash_eval_oracle
+def q137(spark, sf_dir):
+    """:func:`_minhash_eval` at the DEPLOYED sketch config (32, 8)."""
+    return _minhash_eval(spark, sf_dir, num_perm=32, bands=8)
 
 
 def _minhash_eval_oracle(num_perm: int = 64, bands: int = 16) -> str:
@@ -263,53 +267,10 @@ ORACLE_SQL["q137_minhash_eval"] = _minhash_eval_oracle(32, 8)
 
 @query("q180_minhash_eval_portable", _minhash_eval_oracle())
 def q180(spark, sf_dir):
-    """q137's recall/precision report at the library-default sketch
-    config (64, 16) — q137 itself now evaluates the deployed (32, 8)
-    point; together they bracket the banding trade-off with both rows
-    oracle-checked."""
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", k=3, threshold=0.8
-    ).select("id_a", "id_b")
-    approx = dedup.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", k=3, threshold=0.8
-    ).select("id_a", "id_b")
-    j = exact.withColumn("in_exact", F.lit(1)).join(
-        approx.withColumn("in_approx", F.lit(1)),
-        ["id_a", "id_b"],
-        "full_outer",
-    )
-    return j.agg(
-        F.sum(F.coalesce("in_exact", F.lit(0))).alias("n_exact"),
-        F.sum(F.coalesce("in_approx", F.lit(0))).alias("n_approx"),
-        F.sum(
-            F.when(
-                F.col("in_exact").isNotNull()
-                & F.col("in_approx").isNotNull(),
-                1,
-            ).otherwise(0)
-        ).alias("tp"),
-        F.sum(F.when(F.col("in_approx").isNull(), 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(F.col("in_exact").isNull(), 1).otherwise(0)).alias("fp"),
-    ).select(
-        "n_exact",
-        "n_approx",
-        "tp",
-        "fn",
-        "fp",
-        F.when(
-            F.col("n_exact") > 0,
-            (F.col("tp") * 1_000_000).cast("long") / F.col("n_exact"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("recall_micro"),
-        F.when(
-            F.col("n_approx") > 0,
-            (F.col("tp") * 1_000_000).cast("long") / F.col("n_approx"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("precision_micro"),
-    )
+    """:func:`_minhash_eval` at the library-default sketch config
+    (64, 16) — with q137's deployed (32, 8) point, the two bracket the
+    banding trade-off with both rows oracle-checked."""
+    return _minhash_eval(spark, sf_dir, num_perm=64, bands=16)
 
 
 # ---------------------------------------------------------------------------

@@ -962,24 +962,23 @@ def q164(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Ensemble dedup: all near-dup signals -> one family clustering.
 # ---------------------------------------------------------------------------
-# r8 (VERDICT r7 directive #1, closing r6 directive #5): the registered
-# gate's MinHash leg now runs the PORTABLE md5 family at the DEPLOYED
-# operating point (32, 8 — the q166 sweep's knee), so the full ensemble
-# closure hash-checks end to end.  q181 keeps the census at the library
-# default (64, 16); the production xxhash64 leg keeps its local recall
-# pins and inherits the banding behaviour (hash-family-agnostic, q166).
-@query("q165_dedup_ensemble")  # oracle attached below _q181_oracle
-def q165(spark, sf_dir):
+# The registered gate q165's MinHash leg runs the PORTABLE md5 family at
+# the DEPLOYED operating point (32, 8 — the q166 sweep's knee), so the
+# full ensemble closure hash-checks end to end.  q181 is the same census
+# at the library default (64, 16); the production xxhash64 leg keeps its
+# local recall pins and inherits the banding behaviour
+# (hash-family-agnostic, q166).
+def _dedup_ensemble(spark, sf_dir, num_perm: int, bands: int):
     """The production dedup posture: no single signal catches every
     duplicate class, so the EDGE UNION of exact-fingerprint pairs,
-    n-gram Jaccard pairs, banded MinHash pairs (deployed (32, 8)
-    portable config), and SimHash pairs feeds ONE connected-components
-    pass, and a document's family is the transitive closure over ALL
-    signals at once. Output is the family census (size -> n_families,
-    n_docs_absorbed): the corpus-shrink estimate a curation run reports
-    before committing to hard dedup. Each leg is the already-audited
-    operator; the union is cheap (pairs, not documents) and CC runs
-    once instead of per-signal."""
+    n-gram Jaccard pairs, banded MinHash pairs (portable family at
+    ``(num_perm, bands)``), and SimHash pairs feeds ONE
+    connected-components pass, and a document's family is the
+    transitive closure over ALL signals at once. Output is the family
+    census (size -> n_families, n_docs_absorbed): the corpus-shrink
+    estimate a curation run reports before committing to hard dedup.
+    Each leg is the already-audited operator; the union is cheap
+    (pairs, not documents) and CC runs once instead of per-signal."""
     from .operators import dedup
     from .operators.graph import connected_components
 
@@ -993,14 +992,13 @@ def q165(spark, sf_dir):
     ).select(
         F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
     )
+    shingles = shingle_prebuilt_table(spark, sf_dir)
     jac = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", k=3, threshold=0.8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
+        docs, "text", "doc_id", k=3, threshold=0.8, shingles_df=shingles,
     ).select("id_a", "id_b")
-    mh = dedup.minhash_lsh_pairs_portable(
+    mh = dedup.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, threshold=0.8,
-        num_perm=32, bands=8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
+        num_perm=num_perm, bands=bands, shingles_df=shingles, portable=True,
     ).select("id_a", "id_b")
     sh = dedup.simhash_near_pairs(
         docs, "text", "doc_id", max_hamming=3
@@ -1017,6 +1015,12 @@ def q165(spark, sf_dir):
         F.count("*").alias("n_families"),
         (F.count("*") * F.col("family_size")).cast("long").alias("n_docs"),
     )
+
+
+@query("q165_dedup_ensemble")  # oracle attached below _q181_oracle
+def q165(spark, sf_dir):
+    """:func:`_dedup_ensemble` at the DEPLOYED sketch config (32, 8)."""
+    return _dedup_ensemble(spark, sf_dir, num_perm=32, bands=8)
 
 
 def _q181_oracle(num_perm: int = 64, bands: int = 16) -> str:
@@ -1081,45 +1085,10 @@ ORACLE_SQL["q165_dedup_ensemble"] = _q181_oracle(32, 8)
 
 @query("q181_dedup_ensemble_portable", _q181_oracle())
 def q181(spark, sf_dir):
-    """q165's ensemble census with the MinHash leg at the library
-    default (64, 16) — q165 itself now runs the deployed (32, 8)
-    point; both closures are driver hash-checked."""
-    from .operators import dedup
-    from .operators.graph import connected_components
-
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    fp = text_analysis.with_fingerprint(docs).select("doc_id", "fingerprint")
-    a, b = fp.alias("a"), fp.alias("b")
-    exact_pairs = a.join(
-        b,
-        (F.col("a.fingerprint") == F.col("b.fingerprint"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-    )
-    jac = dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", k=3, threshold=0.8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
-    ).select("id_a", "id_b")
-    mh = dedup.minhash_lsh_pairs_portable(
-        docs, "text", "doc_id", k=3, threshold=0.8,
-        shingles_df=shingle_prebuilt_table(spark, sf_dir),
-    ).select("id_a", "id_b")
-    sh = dedup.simhash_near_pairs(
-        docs, "text", "doc_id", max_hamming=3
-    ).select("id_a", "id_b")
-    edges = (
-        exact_pairs.unionByName(jac)
-        .unionByName(mh)
-        .unionByName(sh)
-        .distinct()
-    )
-    comp = connected_components(edges)
-    fam = comp.groupBy("component").agg(F.count("*").alias("family_size"))
-    return fam.groupBy("family_size").agg(
-        F.count("*").alias("n_families"),
-        (F.count("*") * F.col("family_size")).cast("long").alias("n_docs"),
-    )
+    """:func:`_dedup_ensemble` at the library-default sketch config
+    (64, 16); with q165's deployed (32, 8) point, both closures are
+    hash-checked against DuckDB."""
+    return _dedup_ensemble(spark, sf_dir, num_perm=64, bands=16)
 
 
 # ---------------------------------------------------------------------------
@@ -1198,10 +1167,10 @@ def q166(spark, sf_dir):
     )
     out = None
     for num_perm, bands in _Q166_SETTINGS:
-        approx = dedup.minhash_lsh_pairs_portable(
+        approx = dedup.minhash_lsh_pairs(
             docs, "text", "doc_id",
             k=3, threshold=0.8, num_perm=num_perm, bands=bands,
-            shingles_df=shingle_prebuilt_table(spark, sf_dir),
+            shingles_df=shingle_prebuilt_table(spark, sf_dir), portable=True,
         ).select("id_a", "id_b")
         j = exact.withColumn("e", F.lit(1)).join(
             approx.withColumn("a", F.lit(1)), ["id_a", "id_b"], "full_outer"

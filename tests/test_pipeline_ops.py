@@ -23,6 +23,7 @@ from mtg_bulk_database_spark.operators.text_analysis import (
     with_quality_score,
     with_token_counts,
 )
+from mtg_bulk_database_spark.plans import executed_plan
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -100,13 +101,37 @@ def test_signature_kernel_matches_hof_core(docs):
             assert got == want, (kind, num_perm, seed)
 
 
-def test_minhash_lsh_matches_exact_jaccard(docs):
+@pytest.mark.parametrize("portable", [False, True])
+def test_minhash_lsh_matches_exact_jaccard(docs, portable):
     exact = _pairs(dedup.ngram_jaccard_pairs(docs, "text", "doc_id", 3, 0.8))
     assert exact, "synthetic corpus should contain engineered near-dups"
-    approx = _pairs(dedup.minhash_lsh_pairs(docs, "text", "doc_id", 3, 0.8))
+    approx = _pairs(
+        dedup.minhash_lsh_pairs(
+            docs, "text", "doc_id", 3, 0.8, portable=portable
+        )
+    )
     assert approx <= exact, "exact verify step must kill false positives"
     recall = len(approx) / len(exact)
     assert recall == 1.0, f"LSH recall {recall} on the engineered near-dups"
+
+
+def test_minhash_signature_base_hash_follows_portable_flag(docs):
+    """The ``portable`` flag must reach the signature's base hash: md5
+    and no xxhash64 when set, the reverse by default.  String shingles
+    carry no hash of their own, so every hash in the plan is the base
+    hash (the LSH callers localCheckpoint this frame, which hides it
+    from their final plans)."""
+    sh = dedup.with_shingles(docs, "text", "doc_id", 3)
+    for portable in (False, True):
+        plan = executed_plan(
+            sh.select(
+                dedup.minhash_signature(
+                    F.col("shingles"), portable=portable
+                ).alias("sig")
+            )
+        )
+        assert ("md5" in plan) == portable, (portable, plan)
+        assert ("xxhash64" in plan) != portable, (portable, plan)
 
 
 def test_prefix_jaccard_equals_lean_jaccard(docs):

@@ -495,6 +495,30 @@ def test_uniform_histogram_mode_bit_equal_and_edge_cases(spark):
     ]
 
 
+def test_footer_memo_hands_out_copies_and_stays_bounded(spark):
+    """The footer-bounds memo must not leak its cached dict: a caller
+    mutating a returned result gets the original bounds back on the
+    next call, and many distinct keys never grow it past its cap."""
+    from mtg_bulk_database_spark.catalog import load_table
+    from mtg_bulk_database_spark.operators import scalewin
+
+    li = load_table(spark, SF_DIR, "lineitem")
+    col_map = {"_r": "l_quantity"}
+    first = scalewin.footer_bucket_histograms(li, col_map, buckets=8)
+    want = {k: list(v) for k, v in first.items()}
+    assert want["_r"]
+    first["_r"].clear()
+    first["_extra"] = [1.0]
+    again = scalewin.footer_bucket_histograms(li, col_map, buckets=8)
+    assert again == want
+    again["_r"].append(-1.0)
+    assert scalewin.footer_bucket_histograms(li, col_map, buckets=8) == want
+
+    for b in range(2, scalewin._FOOTER_MEMO_MAX + 8):
+        scalewin.footer_bucket_histograms(li, col_map, buckets=b)
+    assert len(scalewin._FOOTER_MEMO) <= scalewin._FOOTER_MEMO_MAX
+
+
 def test_footer_histogram_matches_aggregate_and_falls_back(spark):
     from mtg_bulk_database_spark.catalog import load_table
     from mtg_bulk_database_spark.operators.scalewin import (
