@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ingest import _drain, _file_stream
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -37,11 +39,7 @@ EVENTS_SCHEMA = T.StructType(
 def read_event_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream with an explicit schema (streaming readers
     must never infer). One file = one micro-batch increment."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    return _file_stream(spark, src_dir, EVENTS_SCHEMA)
 
 
 def stream_tumbling_counts(
@@ -111,19 +109,11 @@ def run_available_now(
       than the watermark are dropped — the bounded-state production
       semantics; windows still open at end-of-input are withheld.
     """
-    q = (
+    _drain(
         sdf.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        timeout_s,
+        f"streaming query {query_name!r}",
     )
-    finished = q.awaitTermination(timeout_s)
-    if not finished:
-        # returning a half-filled memory table would silently hand the
-        # caller a partial aggregation; stop the leaked query and fail
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain {query_name!r} still running after {timeout_s}s"
-        )
     return sdf.sparkSession.table(query_name)

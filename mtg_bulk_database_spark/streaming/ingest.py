@@ -6,14 +6,124 @@ file source with an ``availableNow`` trigger).
 Dropping new bulk JSONL files into a landing directory and re-running
 gives exactly-once incremental ingest with checkpoint-tracked progress —
 the distributed answer to the reference's mtime freshness gate.
+
+Every leg here runs on one driver: :func:`_file_stream` (the reader),
+:func:`_drain` (the availableNow drain) and, for the mergeable-state
+folds, :func:`_fold_state` (per-batch state writes, the fresh-checkpoint
+guard and the merged read-back).  A ``stream_*`` function keeps only
+what is its own: its fold and its merge.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..ingest.transform import prepare_cards
 from ..schemas import CARDS_RAW_SCHEMA
+
+
+def _file_stream(
+    spark: SparkSession, src_dir: str, schema=None, fmt: str = "parquet"
+) -> DataFrame:
+    """File-source stream, one file per micro-batch. Pass an explicit
+    ``schema`` wherever the caller knows it: streaming readers should
+    not infer."""
+    reader = spark.readStream
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.option("maxFilesPerTrigger", 1).format(fmt).load(src_dir)
+
+
+def _drain(writer, timeout_s: int, what: str) -> None:
+    """Start ``writer`` with the ``availableNow`` trigger and wait for it
+    to process all available input. ``awaitTermination`` returns False
+    on timeout with the query still running: stop it and raise rather
+    than hand the caller a partial (or missing) result."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{what} did not drain within {timeout_s}s")
+
+
+def _batch_dirs(path: str) -> list:
+    if not os.path.isdir(path):
+        return []
+    return [
+        os.path.join(path, d) for d in os.listdir(path)
+        if d.startswith("batch=")
+    ]
+
+
+def _fold_state(
+    spark: SparkSession,
+    src_dir: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    fold,
+    merges: dict,
+    schema,
+    timeout_s: int,
+) -> dict:
+    """Drain ``src_dir`` through a mergeable-state fold; return the
+    merged state as ``{subdir: DataFrame}``.
+
+    ``fold`` is a pure ``batch_df -> {subdir: DataFrame}``; ``merges``
+    maps every subdir (``""`` = ``state_dir`` itself) to the function
+    that merges the union of its batch frames. The contract every fold
+    shares:
+
+    - **Replay.** Batch ``<id>``'s frames are written with OVERWRITE to
+      ``<state_dir>/<subdir>/batch=<id>``. foreachBatch is
+      at-least-once, so a replayed batch id lands on the same path and
+      replaces itself instead of appending a double-counting copy.
+    - **Fresh checkpoint.** A missing or empty ``checkpoint_dir`` means
+      any ``batch=<id>`` state on disk is from a PRIOR run (a resumed
+      run always has its checkpoint), and the per-batch overwrite only
+      replaces colliding ids; those directories are removed before the
+      drain so the merge sees only this run's folds.
+    - **Empty source.** A subdir with no batch written yet merges an
+      empty frame with the schema of the fold applied to the source
+      schema, every column nullable as a parquet read returns it, so
+      zero drained batches return exactly the schema of a non-empty run
+      instead of throwing PATH_NOT_FOUND.
+    """
+    src = _file_stream(spark, src_dir, schema)
+    paths = {
+        sub: os.path.join(state_dir, sub) if sub else state_dir
+        for sub in merges
+    }
+    if not os.path.isdir(checkpoint_dir) or not os.listdir(checkpoint_dir):
+        for p in paths.values():
+            for stale in _batch_dirs(p):
+                shutil.rmtree(stale)
+
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+        for sub, df in fold(batch_df).items():
+            df.write.mode("overwrite").parquet(f"{paths[sub]}/batch={batch_id}")
+
+    _drain(
+        src.writeStream.foreachBatch(fold_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        timeout_s,
+        f"state fold of {src_dir!r} into {state_dir!r}",
+    )
+    merged = {}
+    for sub, merge in merges.items():
+        if _batch_dirs(paths[sub]):
+            state = spark.read.parquet(paths[sub]).drop("batch")
+        else:
+            folded = fold(spark.createDataFrame([], src.schema))[sub]
+            state = spark.createDataFrame([], T.StructType([
+                T.StructField(f.name, f.dataType) for f in folded.schema
+            ]))
+        merged[sub] = merge(state)
+    return merged
 
 
 def stream_ingest_cards(
@@ -30,29 +140,17 @@ def stream_ingest_cards(
     (or, in production, a ``foreachBatch`` Delta MERGE — same transform
     layer, exactly-once via the checkpoint).
     """
-    raw = (
-        spark.readStream.schema(CARDS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing_dir)
+    prepared = prepare_cards(
+        _file_stream(spark, landing_dir, CARDS_RAW_SCHEMA, "json")
     )
-    prepared = prepare_cards(raw)
-    q = (
+    _drain(
         prepared.writeStream.format("parquet")
         .option("path", table_path)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        timeout_s,
+        f"stream_ingest_cards of {landing_dir!r}",
     )
-    # awaitTermination returns False on timeout with the query still
-    # running — stop it and fail loudly rather than returning a partial
-    # (or missing) table (mirrors events.run_available_now)
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_ingest_cards did not drain within {timeout_s}s "
-            f"(landing_dir={landing_dir!r})"
-        )
     return spark.read.parquet(table_path)
 
 
@@ -75,46 +173,29 @@ def stream_upsert_cards(
     batches converge to the same table — the same argument Delta's
     ``foreachBatch`` MERGE pattern makes in production (swap the body
     for ``deltaTable.merge``; the stream wiring is unchanged).
+
+    ``table_format="ledger"`` is the snapshot-isolated sink: every
+    micro-batch commits a new ledger version, so downstream readers
+    never observe a half-applied batch (the local ledger stands in for
+    the Delta log).
     """
-    from ..ingest.sink import merge_upsert
-
-    raw = (
-        spark.readStream.schema(CARDS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing_dir)
-    )
-    prepared = prepare_cards(raw)
-
     if table_format == "ledger":
-        # snapshot-isolated streaming sink: every micro-batch commits a
-        # new ledger version, so downstream readers never observe a
-        # half-applied batch — the foreachBatch Delta MERGE shape with
-        # the local ledger standing in for the Delta log
-        from ..ingest.ledger import ledger_merge_upsert
-
-        def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-            ledger_merge_upsert(spark, table_path, batch_df, key=key)
-
+        from ..ingest.ledger import ledger_merge_upsert as upsert
     elif table_format == "parquet":
-
-        def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-            merge_upsert(spark, table_path, batch_df, key=key)
-
+        from ..ingest.sink import merge_upsert as upsert
     else:
         raise ValueError(f"unknown table format: {table_format!r}")
 
-    q = (
-        prepared.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    prepared = prepare_cards(
+        _file_stream(spark, landing_dir, CARDS_RAW_SCHEMA, "json")
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_upsert_cards did not drain within {timeout_s}s "
-            f"(landing_dir={landing_dir!r})"
-        )
+    _drain(
+        prepared.writeStream.foreachBatch(
+            lambda batch_df, _: upsert(spark, table_path, batch_df, key=key)
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        f"stream_upsert_cards of {landing_dir!r}",
+    )
     if table_format == "ledger":
         from ..ingest.ledger import ledger_read
 
@@ -133,60 +214,27 @@ def stream_fold_cms(
 ) -> DataFrame:
     """Streaming frequency sketch: every micro-batch builds its own
     count-min sketch (``sketches.cms_build`` — at most d·w cells no
-    matter the batch size) and APPENDS it; the corpus sketch is the
-    cell-wise sum of all batch sketches, read back with one tiny
-    groupBy. Each batch writes to its own ``batch=<id>`` subdirectory
-    with OVERWRITE: foreachBatch is at-least-once, so a replayed batch
-    id must land on the same path and replace itself rather than
-    append a double-counting second copy — without this the sketch's
-    ``estimate ≤ true + εN`` guarantee silently breaks on the first
-    post-crash restart. Mergeability is what makes the sketch an
-    ingest artifact at 100 TB (compact by re-summing when the cell
-    count grows past a few multiples of d·w).
+    matter the batch size); the corpus sketch is the cell-wise sum of
+    all batch sketches, read back with one tiny groupBy. Replay,
+    fresh-checkpoint and empty-source rules: :func:`_fold_state` —
+    without the replay rule the sketch's ``estimate ≤ true + εN``
+    guarantee would silently break on the first post-crash restart.
+    Mergeability is what makes the sketch an ingest artifact at 100 TB
+    (compact by re-summing when the cell count grows past a few
+    multiples of d·w).
 
-    Returns the merged corpus sketch (``row_idx, bucket, cnt``) — an
-    empty sketch when the source produced no batches yet.
+    Returns the merged corpus sketch (``row_idx, bucket, cnt``).
     """
     from ..operators.sketches import cms_build
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_build(batch_df, col).write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch={batch_id}"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_cms did not drain within {timeout_s}s "
-            f"(src_dir={src_dir!r})"
-        )
-    import os
-
-    from pyspark.sql import functions as F
-
-    if not os.path.isdir(sketch_dir):
-        # zero micro-batches (cold-start ingest dir): empty sketch, not
-        # a PATH_NOT_FOUND crash
-        return spark.createDataFrame(
-            [], "row_idx int, bucket int, cnt long"
-        )
-    return (
-        spark.read.parquet(sketch_dir)
-        .drop("batch")
-        .groupBy("row_idx", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return _fold_state(
+        spark, src_dir, sketch_dir, checkpoint_dir,
+        lambda df: {"": cms_build(df, col)},
+        {"": lambda s: s.groupBy("row_idx", "bucket").agg(
+            F.sum("cnt").alias("cnt")
+        )},
+        schema, timeout_s,
+    )[""]
 
 
 def stream_fold_quantile_sample(
@@ -204,12 +252,9 @@ def stream_fold_quantile_sample(
 ) -> DataFrame:
     """Streaming leg of the quantile sketch (q202): because the
     sketch's state is a content-hash sample, the streaming fold is a
-    STATELESS filter — each micro-batch appends its own sample rows
-    and its per-group exact counts under ``batch=<id>`` (overwrite,
-    the same at-least-once replay rule as :func:`stream_fold_cms`;
-    a replayed batch replaces itself instead of double-counting).
-    No state store, no watermark, no compactor: the sample union IS
-    the merge.
+    STATELESS filter — each micro-batch writes its own sample rows
+    (``samples``) and its per-group exact counts (``counts``). No state
+    store, no watermark, no compactor: the sample union IS the merge.
 
     Returns the estimate over the merged state — schema-identical to
     ``sketches.quantile_sketch_estimate`` on the whole corpus, and
@@ -217,77 +262,49 @@ def stream_fold_quantile_sample(
     however the input was micro-batched; pinned in
     tests/test_streaming.py.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..operators.sampling import fraction_threshold, sample_bucket
-
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
 
     key = F.concat_ws(
         "\x1f", *[F.col(c).cast("string") for c in key_cols]
     )
     thr = fraction_threshold(rate)
+    value = F.col(value_col)
+    qnames = [f"q_{str(qv).replace('.', '_')}" for qv in quantiles]
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.filter(
-            (sample_bucket(key) < thr) & F.col(value_col).isNotNull()
-        ).select(group_col, F.col(value_col).cast("double")).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/samples/batch={batch_id}")
-        batch_df.groupBy(group_col).agg(
-            F.count(
-                F.when(F.col(value_col).isNotNull(), 1)
-            ).alias("n")
-        ).write.mode("overwrite").parquet(
-            f"{state_dir}/counts/batch={batch_id}"
-        )
+    def fold(df: DataFrame) -> dict:
+        return {
+            "samples": df.filter(
+                (sample_bucket(key) < thr) & value.isNotNull()
+            ).select(group_col, value.cast("double")),
+            "counts": df.groupBy(group_col).agg(
+                F.count(F.when(value.isNotNull(), 1)).alias("n")
+            ),
+        }
 
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    state = _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir, fold,
+        {
+            "samples": lambda s: s.groupBy(group_col).agg(
+                *[
+                    F.percentile(value, F.lit(qv)).alias(name)
+                    for qv, name in zip(quantiles, qnames)
+                ],
+                F.count(value).alias("sample_n"),
+            ),
+            "counts": lambda s: s.groupBy(group_col).agg(
+                F.sum("n").alias("n")
+            ),
+        },
+        schema, timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_quantile_sample did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
-
-    qcols = [
-        F.percentile(F.col(value_col), F.lit(qv)).alias(
-            f"q_{str(qv).replace('.', '_')}"
-        )
-        for qv in quantiles
-    ]
-    if not os.path.isdir(f"{state_dir}/samples"):
-        empty_cols = ", ".join(
-            f"q_{str(qv).replace('.', '_')} double" for qv in quantiles
-        )
-        return spark.createDataFrame(
-            [], f"{group_col} string, {empty_cols}, sample_n long, n long"
-        )
-    samples = spark.read.parquet(f"{state_dir}/samples").drop("batch")
-    counts = spark.read.parquet(f"{state_dir}/counts").drop("batch")
-    est = samples.groupBy(group_col).agg(
-        *qcols, F.count(value_col).alias("sample_n")
-    )
-    totals = counts.groupBy(group_col).agg(F.sum("n").alias("n"))
     # full outer: a group can be all-unsampled (counts only) — emit it
     # with NULL estimates rather than dropping it, matching the batch
     # op's NULL percentile over an empty sample.
-    return est.join(totals, on=group_col, how="full").select(
+    return state["samples"].join(
+        state["counts"], on=group_col, how="full"
+    ).select(
         group_col,
-        *[
-            F.col(f"q_{str(qv).replace('.', '_')}")
-            for qv in quantiles
-        ],
+        *qnames,
         F.coalesce("sample_n", F.lit(0)).alias("sample_n"),
         F.coalesce("n", F.lit(0)).alias("n"),
     )
@@ -305,54 +322,25 @@ def stream_fold_hll(
 ) -> DataFrame:
     """Streaming distinct-count sketch: each micro-batch writes its own
     HLL register frame (``sketches.hll_portable_registers`` — at most
-    groups × 2^p rows per batch) under ``batch=<id>`` with OVERWRITE
-    (the at-least-once replay rule shared by every fold here); the
-    union sketch is MAX per register, which is associative, commutative
-    AND idempotent — the strongest merge in the sketch family (even a
-    double-written batch could not perturb it). Returns the per-group
-    estimate over the merged registers, bit-identical to the batch
-    sketch over the whole corpus (pinned in tests)."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    groups × 2^p rows per batch); the union sketch is MAX per register,
+    which is associative, commutative AND idempotent — the strongest
+    merge in the sketch family (even a double-written batch could not
+    perturb it). Returns the per-group estimate over the merged
+    registers, bit-identical to the batch sketch over the whole corpus
+    (pinned in tests)."""
     from ..operators.sketches import (
         hll_estimate_from_registers,
         hll_portable_registers,
     )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hll_portable_registers(batch_df, group_col, col).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch={batch_id}")
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_hll did not drain within {timeout_s}s "
-            f"(src_dir={src_dir!r})"
-        )
-    if not os.path.isdir(state_dir):
-        return spark.createDataFrame(
-            [], f"{group_col} string, est_distinct double"
-        )
-    regs = (
-        spark.read.parquet(state_dir)
-        .drop("batch")
-        .groupBy(group_col, "idx")
-        .agg(F.max("M").alias("M"))
-    )
+    regs = _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir,
+        lambda df: {"": hll_portable_registers(df, group_col, col)},
+        {"": lambda s: s.groupBy(group_col, "idx").agg(
+            F.max("M").alias("M")
+        )},
+        schema, timeout_s,
+    )[""]
     return hll_estimate_from_registers(regs, group_col)
 
 
@@ -371,12 +359,10 @@ def stream_fold_drift_counts(
     """Streaming leg of the drift monitor: each micro-batch folds to
     its |groups|-row conditional-count frame (``drift._bucket_counts``
     — the monitor's mergeable state: every column is a COUNT, so the
-    corpus state is the per-group SUM of batch states, associative and
-    replay-safe under the same ``batch=<id>`` overwrite contract as the
-    sketch folds). Feed the merged frame to
-    ``drift.drift_report_from_counts`` next to a reference side and the
-    report is EXPRESSION-IDENTICAL to the batch path — streamed ≡ batch
-    is pinned bitwise in tests/test_drift.py.
+    corpus state is the per-group SUM of batch states). Feed the merged
+    frame to ``drift.drift_report_from_counts`` next to a reference
+    side and the report is EXPRESSION-IDENTICAL to the batch path —
+    streamed ≡ batch is pinned bitwise in tests/test_drift.py.
 
     At 100 TB this is the shape drift monitoring wants anyway: the
     state that persists per ingest run is groups × (buckets+2) integers
@@ -384,46 +370,16 @@ def stream_fold_drift_counts(
     stream itself."""
     from ..operators.drift import _bucket_counts
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _bucket_counts(
-            batch_df, group_col, value_col, bounds, prefix
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}")
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_drift_counts did not drain within {timeout_s}s "
-            f"(src_dir={src_dir!r})"
-        )
-    import os
-
-    from pyspark.sql import functions as F
-
-    cols = [f"{prefix}_n", f"{prefix}_nulls"] + [
-        f"{prefix}_b{i}" for i in range(len(bounds) + 1)
-    ]
-    if not os.path.isdir(state_dir):
-        schema_str = f"{group_col} string, " + ", ".join(
-            f"{c} long" for c in cols
-        )
-        return spark.createDataFrame([], schema_str)
-    return (
-        spark.read.parquet(state_dir)
-        .drop("batch")
-        .groupBy(group_col)
-        .agg(*[F.sum(c).alias(c) for c in cols])
-    )
+    return _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir,
+        lambda df: {
+            "": _bucket_counts(df, group_col, value_col, bounds, prefix)
+        },
+        {"": lambda s: s.groupBy(group_col).agg(
+            *[F.sum(c).alias(c) for c in s.columns if c != group_col]
+        )},
+        schema, timeout_s,
+    )[""]
 
 
 def stream_fold_retention_states(
@@ -437,13 +393,11 @@ def stream_fold_retention_states(
     """Streaming leg of the cohort-retention matrix (q218): each
     micro-batch folds the event stream into the two PERSISTED
     ARTIFACTS the batch query's docstring names — the per-user
-    first-seen table (MIN-mergeable: the corpus first-seen is the min
-    over batch minima, so an out-of-order batch that reveals an
-    EARLIER first event re-bases the user's cohort correctly — the
+    first-seen table (``first``, MIN-mergeable: the corpus first-seen
+    is the min over batch minima, so an out-of-order batch that reveals
+    an EARLIER first event re-bases the user's cohort correctly — the
     case a naive incremental grid gets wrong) and the distinct
-    (user, activity-week) cell table (UNION-mergeable).  Both folds
-    write under the same replay-safe ``batch=<id>`` overwrite contract
-    as the sketch/drift folds.
+    (user, activity-week) cell table (``weeks``, UNION-mergeable).
 
     Returns ``(first_seen, activity_weeks)`` merged across all drained
     batches; feed them to :func:`retention_from_states` for a report
@@ -455,85 +409,29 @@ def stream_fold_retention_states(
     persists anyway (first-seen ~ |users| rows, activity ~ |user,week|
     rows); each micro-batch contributes a pre-aggregated frame, so the
     stream never reshuffles history — the merge is one groupBy over
-    the state directory.
+    the state directory."""
 
-    State/checkpoint pairing (ADVICE r7): a FRESH checkpoint dir with
-    a reused state_dir would silently merge stale ``batch=<id>``
-    directories from the prior run (the per-batch overwrite only
-    replaces colliding ids), so a fresh checkpoint clears the state
-    subdirs first; and an empty source (zero drained batches) returns
-    empty frames with the fold's exact schemas instead of throwing
-    PATH_NOT_FOUND on the state read."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    if not os.path.isdir(checkpoint_dir) or not os.listdir(checkpoint_dir):
-        # fresh run: any batch=<id> state on disk is from a PRIOR run
-        # (a resumed run always has its checkpoint); drop it so the
-        # merge below sees only this run's folds
-        for sub in ("first", "weeks"):
-            p = os.path.join(state_dir, sub)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ev = batch_df.where(
-            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-        )
-        ev.groupBy("user_id").agg(
-            F.min("ts").alias("first_ts")
-        ).write.mode("overwrite").parquet(
-            f"{state_dir}/first/batch={batch_id}"
-        )
-        ev.select(
-            "user_id",
-            F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
-        ).distinct().write.mode("overwrite").parquet(
-            f"{state_dir}/weeks/batch={batch_id}"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_retention_states did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
-    if not os.path.isdir(os.path.join(state_dir, "first")):
-        # zero drained batches: run the fold expressions over an empty
-        # frame so the returned schemas match the merged-state shapes
-        empty = spark.createDataFrame([], src.schema)
-        return (
-            empty.groupBy("user_id").agg(F.min("ts").alias("first_ts")),
-            empty.select(
+    def fold(df: DataFrame) -> dict:
+        ev = df.where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+        return {
+            "first": ev.groupBy("user_id").agg(F.min("ts").alias("first_ts")),
+            "weeks": ev.select(
                 "user_id",
                 F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
             ).distinct(),
-        )
-    first = (
-        spark.read.parquet(f"{state_dir}/first")
-        .drop("batch")
-        .groupBy("user_id")
-        .agg(F.min("first_ts").alias("first_ts"))
+        }
+
+    state = _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir, fold,
+        {
+            "first": lambda s: s.groupBy("user_id").agg(
+                F.min("first_ts").alias("first_ts")
+            ),
+            "weeks": lambda s: s.distinct(),
+        },
+        schema, timeout_s,
     )
-    weeks = (
-        spark.read.parquet(f"{state_dir}/weeks")
-        .drop("batch")
-        .distinct()
-    )
-    return first, weeks
+    return state["first"], state["weeks"]
 
 
 def retention_from_states(first: DataFrame, weeks: DataFrame) -> DataFrame:
@@ -541,8 +439,6 @@ def retention_from_states(first: DataFrame, weeks: DataFrame) -> DataFrame:
     same expression tree as the batch query (DATE-cast week
     truncation, integer week arithmetic, one final division), so
     streamed ≡ batch is row-exact, not approximate."""
-    from pyspark.sql import functions as F
-
     first_seen = first.select(
         "user_id",
         F.date_trunc("week", F.col("first_ts"))
@@ -587,11 +483,9 @@ def stream_fold_source_token_counts(
 ):
     """Streaming leg of the token-budget planner (q240): each
     micro-batch of the document stream folds into the per-source token
-    count — the simplest mergeable state in the family (per-batch
-    partial SUMs; the corpus total is one more SUM over batch rows),
-    persisted under the same replay-safe ``batch=<id>`` overwrite
-    contract as the sketch/retention folds, with the same fresh-
-    checkpoint state clearing and empty-source schema guard.
+    count (``tokcounts``) — the simplest mergeable state in the family
+    (per-batch partial SUMs; the corpus total is one more SUM over
+    batch rows).
 
     Returns the MERGED (source, n_tokens) relation; feed it to
     ``pipeline_queries13.epoch_capped_allocation`` for an allocation
@@ -603,49 +497,16 @@ def stream_fold_source_token_counts(
     (|sources| rows per batch); the stream never reshuffles history —
     each batch contributes a pre-aggregated frame and the merge is one
     |sources|-key groupBy over the state directory."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from ..pipeline_queries13 import source_token_counts
 
-    if not os.path.isdir(checkpoint_dir) or not os.listdir(checkpoint_dir):
-        p = os.path.join(state_dir, "tokcounts")
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        source_token_counts(batch_df).write.mode("overwrite").parquet(
-            f"{state_dir}/tokcounts/batch={batch_id}"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_source_token_counts did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
-    if not os.path.isdir(os.path.join(state_dir, "tokcounts")):
-        empty = spark.createDataFrame([], src.schema)
-        return source_token_counts(empty)
-    return (
-        spark.read.parquet(f"{state_dir}/tokcounts")
-        .drop("batch")
-        .groupBy("source")
-        .agg(F.sum("n_tokens").cast("long").alias("n_tokens"))
-    )
+    return _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir,
+        lambda df: {"tokcounts": source_token_counts(df)},
+        {"tokcounts": lambda s: s.groupBy("source").agg(
+            F.sum("n_tokens").cast("long").alias("n_tokens")
+        )},
+        schema, timeout_s,
+    )["tokcounts"]
 
 
 def stream_fold_dedup_mix(
@@ -658,13 +519,11 @@ def stream_fold_dedup_mix(
 ):
     """Streaming leg of the dedup-adjusted mix planner (q242): each
     micro-batch folds into the ``(source, fingerprint, nt, n_docs)``
-    state (``pipeline_queries13.dedup_mix_state``) — counts at that
-    grain are SUM-mergeable, so the merged state equals the batch
-    state over the union of all batches even when copies of one
-    fingerprint arrive in DIFFERENT micro-batches (the cross-batch
-    duplicate case the equivalence test plants).  Same replay-safe
-    ``batch=<id>`` overwrite contract, fresh-checkpoint state
-    clearing, and empty-source schema guard as the other folds.
+    state (``dedupmix``, ``pipeline_queries13.dedup_mix_state``) —
+    counts at that grain are SUM-mergeable, so the merged state equals
+    the batch state over the union of all batches even when copies of
+    one fingerprint arrive in DIFFERENT micro-batches (the cross-batch
+    duplicate case the equivalence test plants).
 
     Returns the MERGED state; feed it to
     ``dedup_adjusted_mix_from_state`` for a mix table row-identical to
@@ -675,49 +534,16 @@ def stream_fold_dedup_mix(
     the merge is one groupBy over the state directory, and the
     downstream copy-count groupBy is the only fingerprint-wide
     shuffle, exactly the batch gate's shape."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from ..pipeline_queries13 import dedup_mix_state
 
-    if not os.path.isdir(checkpoint_dir) or not os.listdir(checkpoint_dir):
-        p = os.path.join(state_dir, "dedupmix")
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        dedup_mix_state(batch_df).write.mode("overwrite").parquet(
-            f"{state_dir}/dedupmix/batch={batch_id}"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_dedup_mix did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
-    if not os.path.isdir(os.path.join(state_dir, "dedupmix")):
-        empty = spark.createDataFrame([], src.schema)
-        return dedup_mix_state(empty)
-    return (
-        spark.read.parquet(f"{state_dir}/dedupmix")
-        .drop("batch")
-        .groupBy("source", "fingerprint", "nt")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-    )
+    return _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir,
+        lambda df: {"dedupmix": dedup_mix_state(df)},
+        {"dedupmix": lambda s: s.groupBy("source", "fingerprint", "nt").agg(
+            F.sum("n_docs").cast("long").alias("n_docs")
+        )},
+        schema, timeout_s,
+    )["dedupmix"]
 
 
 def stream_fold_paragraph_dedup(
@@ -730,11 +556,9 @@ def stream_fold_paragraph_dedup(
 ):
     """Streaming leg of paragraph-level dedup (q245): each micro-batch
     of the document stream folds into the paragraph OCCURRENCE ledger
-    (``pipeline_queries14.paragraph_occurrences`` — the expensive
-    tokenize+window+fingerprint half runs once per batch, never over
-    history), under the replay-safe ``batch=<id>`` overwrite contract
-    with the fresh-checkpoint clearing and empty-source guard the fold
-    family shares.
+    (``paraocc``, ``pipeline_queries14.paragraph_occurrences`` — the
+    expensive tokenize+window+fingerprint half runs once per batch,
+    never over history).
 
     Returns the MERGED occurrence relation; feed it to
     ``paragraph_dedup_stats`` for per-document surviving-text stats
@@ -749,44 +573,14 @@ def stream_fold_paragraph_dedup(
     ints + two fixed-width keys — no text), the incremental analog of
     the persisted paragraph index; the only corpus-wide shuffle stays
     the fingerprint GROUP BY at read time."""
-    import os
-    import shutil
-
     from ..pipeline_queries14 import paragraph_occurrences, paragraph_table
 
-    if not os.path.isdir(checkpoint_dir) or not os.listdir(checkpoint_dir):
-        p = os.path.join(state_dir, "paraocc")
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        paragraph_occurrences(
-            paragraph_table(batch_df)
-        ).write.mode("overwrite").parquet(
-            f"{state_dir}/paraocc/batch={batch_id}"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_fold_paragraph_dedup did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
-    if not os.path.isdir(os.path.join(state_dir, "paraocc")):
-        empty = spark.createDataFrame([], src.schema)
-        return paragraph_occurrences(paragraph_table(empty))
-    return spark.read.parquet(f"{state_dir}/paraocc").drop("batch")
+    return _fold_state(
+        spark, src_dir, state_dir, checkpoint_dir,
+        lambda df: {"paraocc": paragraph_occurrences(paragraph_table(df))},
+        {"paraocc": lambda s: s},
+        schema, timeout_s,
+    )["paraocc"]
 
 
 def stream_refresh_artifacts(
@@ -826,28 +620,17 @@ def stream_refresh_artifacts(
     zero corpus re-scans."""
     from ..ingest.artifacts import refresh_documents
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-
     def fold_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        refresh_documents(spark, artifact_root, batch_df, batch_id=batch_id)
+        if not batch_df.isEmpty():
+            refresh_documents(spark, artifact_root, batch_df, batch_id=batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _file_stream(spark, src_dir, schema).writeStream.foreachBatch(
+            fold_batch
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        f"stream_refresh_artifacts of {src_dir!r}",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_refresh_artifacts did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
 
 
 def stream_admit_documents(
@@ -884,25 +667,15 @@ def stream_admit_documents(
     from ..ingest.admission import admit_batch_exactly_once
 
     def fold_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        admit_batch_exactly_once(
-            spark, artifact_root, batch_df, tau, df_cap, batch_id
-        )
+        if not batch_df.isEmpty():
+            admit_batch_exactly_once(
+                spark, artifact_root, batch_df, tau, df_cap, batch_id
+            )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    src = reader.option("maxFilesPerTrigger", 1).parquet(src_dir)
-    q = (
-        src.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _file_stream(spark, src_dir, schema).writeStream.foreachBatch(
+            fold_batch
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        f"stream_admit_documents of {src_dir!r}",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream_admit_documents did not drain within "
-            f"{timeout_s}s (src_dir={src_dir!r})"
-        )
