@@ -12,8 +12,11 @@ storage layer can swap without touching operators.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import logging
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,6 +102,57 @@ def load_table(
         if have < want:
             df = df.repartition(want)
     return df
+
+
+#: entries one build-once accessor (:func:`_session_memo`) keeps before
+#: it evicts its oldest: a long test session over many corpora must not
+#: pin unbounded driver memory or executor storage.
+_MEMO_BOUND = 8
+
+
+def _session_memo(builder):
+    """Build-once-per-session memo for a prebuilt-artifact accessor
+    ``builder(spark, ...)`` — the engine's analog of the indexes the
+    reference's Postgres builds once (``init.sql:137-138``).
+
+    The key is the applicationId plus every argument after ``spark``,
+    bound with defaults applied, so positional, keyword and
+    default-filled calls share one entry and no argument the builder
+    reads can be left out of it.  Each accessor gets its own map
+    (bench's prebuild pool runs different accessors on different
+    threads), bounded at ``_MEMO_BOUND``: on overflow the oldest entry
+    is dropped and every DataFrame in its value unpersisted, under a
+    lock so two threads never evict the same entry.  A raising
+    builder stores nothing.  What the builder materializes, and when,
+    stays the builder's business (``persist``/``count``/
+    ``localCheckpoint``)."""
+    sig = inspect.signature(builder)
+    memo: dict[tuple, object] = {}
+    evict_lock = threading.Lock()
+
+    @functools.wraps(builder)
+    def accessor(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (
+            spark.sparkContext.applicationId,
+            *list(bound.arguments.values())[1:],
+        )
+        try:
+            return memo[key]
+        except KeyError:
+            pass
+        value = builder(*bound.args, **bound.kwargs)
+        with evict_lock:
+            while len(memo) >= _MEMO_BOUND:
+                old = memo.pop(next(iter(memo)))
+                for part in old if isinstance(old, tuple) else (old,):
+                    if isinstance(part, DataFrame):
+                        part.unpersist()
+            memo[key] = value
+        return value
+
+    return accessor
 
 
 _SHIPPED_APPS: set[str] = set()

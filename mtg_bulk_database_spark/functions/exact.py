@@ -4,6 +4,17 @@ edges)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+
+def _dsum(col, alias):
+    """Order-independent SUM of a double expression (via exact decimal)."""
+    return F.sum(col.cast("decimal(18,6)")).cast("double").alias(alias)
+
+
+def _sql_dsum(expr, alias):
+    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
+
 
 def micro_ratio_sql(num: str, den: str, div: str) -> str:
     """Overflow-safe ``floor(num * 10^6 / den)`` for non-negative

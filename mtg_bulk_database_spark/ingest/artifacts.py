@@ -4,10 +4,11 @@ The prebuilt indexes the hot query paths read — the document shingle
 posting index (``pipeline_queries.shingle_prebuilt_table``), the
 paragraph table + paragraph shingle postings + over-cap stop-shingle
 head (``pipeline_queries14``), and the IVF centroids/assignments
-(``pipeline_queries.ivf_prebuilt_index``) — were session-scoped
-``.persist()`` caches keyed by applicationId: rebuilt from scratch in
-every new SparkSession.  At 100 TB the rebuild IS the corpus scan the
-artifact exists to avoid.
+(``pipeline_queries.ivf_prebuilt_index``) — are session-scoped
+builds behind one memo (``catalog._session_memo``: keyed by
+applicationId plus every argument, at most 8 entries per accessor):
+rebuilt from scratch in every new SparkSession.  At 100 TB the
+rebuild IS the corpus scan the artifact exists to avoid.
 
 This module promotes each of them to a **ledger table**
 (``ingest.ledger`` — atomic commits, snapshot reads, file-skipping

@@ -852,53 +852,12 @@ def simhash_near_pairs(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 5
 ) -> DataFrame:
     """Pairs with Hamming(simhash) ≤ max_hamming via the pigeonhole
-    band join: split 64 bits into 8 8-bit chunks — any pair within
-    Hamming 7 shares at least one exact chunk, so the join is an
-    equi-join on (chunk_idx, chunk_value), never all-pairs."""
+    band join of :func:`hamming64_near_pairs` (so ``max_hamming`` must
+    be <= 7)."""
     # fingerprints feed both sides of the chunk self-join — materialize
     # once or the pandas UDF runs twice (see ngram_jaccard_pairs note)
     fp = with_simhash(df, text_col, id_col).localCheckpoint(eager=False)
-    chunks = fp.select(
-        id_col,
-        "simhash",
-        F.explode_outer(  # _outer: see ngram_jaccard_pairs note
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright("simhash", i * 8)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("val"),
-                    )
-                    for i in range(8)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "simhash", "c.chunk", "c.val")
-    x, y = chunks.alias("x"), chunks.alias("y")
-    cand = (
-        x.join(
-            y,
-            on=[
-                F.col("x.chunk") == F.col("y.chunk"),
-                F.col("x.val") == F.col("y.val"),
-                F.col(f"x.{id_col}") < F.col(f"y.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-            F.col("x.simhash").alias("fp_a"),
-            F.col("y.simhash").alias("fp_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming64_near_pairs(fp, "simhash", id_col, max_hamming)
 
 
 # ---------------------------------------------------------------------------

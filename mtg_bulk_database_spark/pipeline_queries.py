@@ -13,9 +13,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .catalog import load_table
+from .catalog import _session_memo, load_table
 from .functions.text import sql_ts_tokens, sql_tokens
 from .functions.vectors import sql_cosine
+from .ingest.artifacts import _df_counts
 from .operators import dedup, multimodal, similarity, text_analysis
 from .operators.text_analysis import BPE_ISH_RE, WS_SPLIT_RE, sql_stopword_hits
 from .registry import query
@@ -88,75 +89,43 @@ def _jaccard_oracle(threshold: float = 0.8) -> str:
 _JACCARD_ORACLE = _jaccard_oracle()
 
 
-#: (applicationId, sf_dir) → estimated lean-formulation pair rows for
-#: the documents table — the shingle-frequency stat the Jaccard
-#: formulation choice reads; an ingest-time artifact like _ASOF_DEPTH.
-_JACCARD_EST: dict[tuple[str, str], float] = {}
-
-
+@_session_memo
 def jaccard_lean_pair_estimate(spark, sf_dir) -> float:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    est = _JACCARD_EST.get(key)
-    if est is None:
-        docs = load_table(spark, sf_dir, "documents", fan_out=True)
-        est = dedup.estimate_lean_pair_rows(docs, "text", "doc_id", k=3)
-        _JACCARD_EST[key] = est
-    return est
+    """Estimated lean-formulation pair rows for the documents table —
+    the shingle-frequency stat the Jaccard formulation choice reads; an
+    ingest-time artifact like ``asof_click_depth``."""
+    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    return dedup.estimate_lean_pair_rows(docs, "text", "doc_id", k=3)
 
 
-#: (applicationId, sf_dir, kind) → persisted (doc_id, shingles) table —
-#: the ingest-time posting index the whole dedup family shares. The
-#: reference prebuilds exactly this access path as its trigram GIN
-#: index (``init.sql:137-138``); here it is a persisted columnar table
-#: built once per session (bench builds it in the untimed ingest-
-#: artifact block alongside the IVF/PQ indexes). Bounded LRU-ish so a
-#: long test session over many corpora can't pin unbounded storage.
-_SHINGLE_TABLES: dict[tuple[str, str, str], object] = {}
-
-
+@_session_memo
 def shingle_prebuilt_table(spark, sf_dir, kind: str = "string", k: int = 3):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    sh = _SHINGLE_TABLES.get(key)
-    if sh is None:
-        while len(_SHINGLE_TABLES) >= 8:
-            _SHINGLE_TABLES.pop(next(iter(_SHINGLE_TABLES))).unpersist()
-        docs = load_table(spark, sf_dir, "documents", fan_out=True)
-        build = (
-            dedup.with_shingles if kind == "string"
-            else dedup.with_hashed_shingles
-        )
-        sh = build(docs, "text", "doc_id", k=k).persist()
-        sh.count()  # materialize now: queries must not time the build
-        _SHINGLE_TABLES[key] = sh
+    """Persisted (doc_id, shingles) table — the ingest-time posting
+    index the whole dedup family shares. The reference prebuilds
+    exactly this access path as its trigram GIN index
+    (``init.sql:137-138``); here it is a persisted columnar table built
+    once per session (bench builds it in the untimed ingest-artifact
+    block alongside the IVF/PQ indexes)."""
+    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    build = (
+        dedup.with_shingles if kind == "string" else dedup.with_hashed_shingles
+    )
+    sh = build(docs, "text", "doc_id", k=k).persist()
+    sh.count()  # materialize now: queries must not time the build
     return sh
 
 
-#: (applicationId, sf_dir, cap, k) → persisted over-cap stop-shingle
-#: head — an ingest-time STATISTIC like _JACCARD_EST (the ANALYZE
-#: analog): tiny by Zipf at any sane cap, shared by every capped
-#: posting join (q224 containment, hard-negative mining), so the
-#: timed query pays one broadcast anti-join instead of re-counting
-#: document frequencies per run.
-_HOT_SHINGLES: dict[tuple[str, str, int, int], object] = {}
-
-
+@_session_memo
 def hot_shingles_prebuilt(spark, sf_dir, cap: int = 1000, k: int = 3):
-    key = (spark.sparkContext.applicationId, sf_dir, cap, k)
-    hot = _HOT_SHINGLES.get(key)
-    if hot is None:
-        while len(_HOT_SHINGLES) >= 8:
-            _HOT_SHINGLES.pop(next(iter(_HOT_SHINGLES))).unpersist()
-        sh = shingle_prebuilt_table(spark, sf_dir, "string", k)
-        hot = (
-            sh.select(F.explode("shingles").alias("s"))
-            .groupBy("s")
-            .agg(F.count("*").alias("_df_s"))
-            .filter(F.col("_df_s") > cap)
-            .select("s")
-            .persist()
-        )
-        hot.count()  # materialize in the untimed artifact block
-        _HOT_SHINGLES[key] = hot
+    """Persisted over-cap stop-shingle head — an ingest-time STATISTIC
+    like ``jaccard_lean_pair_estimate`` (the ANALYZE analog): tiny by
+    Zipf at any sane cap, shared by every capped posting join (q224
+    containment, hard-negative mining), so the timed query pays one
+    broadcast anti-join instead of re-counting document frequencies
+    per run."""
+    sh = shingle_prebuilt_table(spark, sf_dir, "string", k)
+    hot = _df_counts(sh).filter(F.col("df_s") > cap).select("s").persist()
+    hot.count()  # materialize in the untimed artifact block
     return hot
 
 
@@ -419,32 +388,24 @@ def q37(spark, sf_dir):
     return similarity.lsh_topk(emb.filter(F.col("vec_id") != 0), qv, k=10)
 
 
-#: (applicationId, sf_dir) → (assigned_df, centroids). The IVF coarse
-#: quantizer is an INGEST-time artifact (FAISS convention: train once,
-#: serve many probes) — rebuilding it inside every query invocation
-#: conflates index build with probe cost, which at 100 TB differ by
-#: orders of magnitude. The assigned frame is localCheckpoint-ed by
-#: ivf_index, so reuse costs no recompute; keyed like _SCAN_PARTS so a
-#: new session or sf_dir rebuilds.
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_session_memo
 def ivf_prebuilt_index(spark, sf_dir):
-    """Build-once accessor for the IVF index over ``embeddings``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-        pool = emb.filter(F.col("vec_id") != 0)
-        cached = similarity.ivf_index(pool, n_lists=16)
-        _IVF_CACHE[key] = cached
-    return cached
+    """Build-once accessor for the IVF index over ``embeddings``:
+    (assigned_df, centroids). The coarse quantizer is an INGEST-time
+    artifact (FAISS convention: train once, serve many probes) —
+    rebuilding it inside every query invocation conflates index build
+    with probe cost, which at 100 TB differ by orders of magnitude.
+    The assigned frame is localCheckpoint-ed by ivf_index, so reuse
+    costs no recompute."""
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    pool = emb.filter(F.col("vec_id") != 0)
+    return similarity.ivf_index(pool, n_lists=16)
 
 
 @query("q75_ivf_ann_topk")  # data-adaptive ANN: spherical k-means coarse
 # quantizer + probe-pruned scan over the PREBUILT index (the registered
 # query measures the probe; the build is an ingest artifact, see
-# _IVF_CACHE). Seeded k-means is run-deterministic but its float
+# ivf_prebuilt_index). Seeded k-means is run-deterministic but its float
 # iteration isn't SQL-expressible → rows-only; recall vs the exact q36
 # is pinned in tests/test_pipeline_ops.py::test_ivf_ann_topk
 def q75(spark, sf_dir):

@@ -40,8 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .catalog import load_table
+from .catalog import _session_memo, load_table
 from .functions.text import sql_tokens, tokens
+from .ingest.artifacts import _df_counts
 from .operators.text_analysis import chunk_documents
 from .registry import query
 
@@ -146,83 +147,46 @@ PARAGRAPH_SPLITTERS = {
 }
 
 
-#: (applicationId, sf_dir) → persisted paragraph index — the
-#: sub-document family's ingest artifact, the paragraph-grain analog
-#: of ``shingle_prebuilt_table`` (one tokenize+window pass shared by
-#: q245/q246/q247/q250/q251 instead of five).
-_PARA_TABLES: dict = {}
-
-
+@_session_memo
 def paragraph_prebuilt_table(spark, sf_dir) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pt = _PARA_TABLES.get(key)
-    if pt is None:
-        while len(_PARA_TABLES) >= 8:
-            _PARA_TABLES.pop(next(iter(_PARA_TABLES))).unpersist()
-        docs = load_table(spark, sf_dir, "documents", fan_out=True)
-        pt = paragraph_table(docs).persist()
-        pt.count()  # materialize now: queries must not time the build
-        _PARA_TABLES[key] = pt
+    """Persisted paragraph index — the sub-document family's ingest
+    artifact, the paragraph-grain analog of ``shingle_prebuilt_table``
+    (one tokenize+window pass shared by q245/q246/q247/q250/q251
+    instead of five)."""
+    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    pt = paragraph_table(docs).persist()
+    pt.count()  # materialize now: queries must not time the build
     return pt
 
 
-#: (applicationId, sf_dir) → persisted per-paragraph trigram shingles
-#: — the paragraph posting index q246/q251 join on.
-_PARA_SHINGLES: dict = {}
-
-
+@_session_memo
 def paragraph_shingles_prebuilt(spark, sf_dir) -> DataFrame:
+    """Persisted per-paragraph trigram shingles — the paragraph posting
+    index q246/q251 join on."""
     from .operators.dedup import shingles as shingle_expr
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _PARA_SHINGLES.get(key)
-    if sh is None:
-        while len(_PARA_SHINGLES) >= 8:
-            _PARA_SHINGLES.pop(next(iter(_PARA_SHINGLES))).unpersist()
-        para = paragraph_prebuilt_table(spark, sf_dir).filter(
-            F.col("n_ptok") >= 3
+    para = paragraph_prebuilt_table(spark, sf_dir).filter(F.col("n_ptok") >= 3)
+    sh = (
+        para.select("doc_id", "para_idx", F.split("p_text", " ").alias("_pt"))
+        .select(
+            "doc_id", "para_idx", shingle_expr(F.col("_pt"), 3).alias("shingles")
         )
-        sh = (
-            para.select(
-                "doc_id", "para_idx", F.split("p_text", " ").alias("_pt")
-            )
-            .select(
-                "doc_id",
-                "para_idx",
-                shingle_expr(F.col("_pt"), 3).alias("shingles"),
-            )
-            .persist()
-        )
-        sh.count()
-        _PARA_SHINGLES[key] = sh
+        .persist()
+    )
+    sh.count()
     return sh
 
 
-#: (applicationId, sf_dir, cap) → persisted over-cap stop-shingle head
-#: at PARAGRAPH grain — the ANALYZE-statistic analog the document
-#: family keeps as ``hot_shingles_prebuilt`` (r8): tiny by Zipf at any
-#: sane cap, so the timed query pays one broadcast anti-join instead
-#: of a full postings DF-count per run.
-_PARA_HOT: dict = {}
-
-
+@_session_memo
 def paragraph_hot_shingles_prebuilt(spark, sf_dir, cap: int = _PARA_DF_CAP):
-    key = (spark.sparkContext.applicationId, sf_dir, cap)
-    hot = _PARA_HOT.get(key)
-    if hot is None:
-        while len(_PARA_HOT) >= 8:
-            _PARA_HOT.pop(next(iter(_PARA_HOT))).unpersist()
-        sh = paragraph_shingles_prebuilt(spark, sf_dir)
-        hot = (
-            sh.select(F.explode("shingles").alias("s"))
-            .groupBy("s")
-            .agg(F.count("*").alias("_df_s"))
-            .filter(F.col("_df_s") > cap)
-            .select("s")
-            .persist()
-        )
-        hot.count()
-        _PARA_HOT[key] = hot
+    """Persisted over-cap stop-shingle head at PARAGRAPH grain — the
+    ANALYZE-statistic analog the document family keeps as
+    ``hot_shingles_prebuilt`` (r8): tiny by Zipf at any sane cap, so
+    the timed query pays one broadcast anti-join instead of a full
+    postings DF-count per run."""
+    sh = paragraph_shingles_prebuilt(spark, sf_dir)
+    hot = _df_counts(sh).filter(F.col("df_s") > cap).select("s").persist()
+    hot.count()
     return hot
 
 

@@ -14,12 +14,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .functions.exact import _sql_dsum
 from .functions.text import sql_tokens
 from .functions.vectors import cosine_similarity, indexable_vector, sql_cosine
 from .operators import dedup, retrieval, text_analysis
 from .operators.text_analysis import sql_stopword_hits
 from .pipeline_queries import _JACCARD_ORACLE
-from .queries import _sql_dsum
 from .registry import query
 
 _TOKS = sql_tokens("text")

@@ -19,16 +19,8 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import text_analysis
+from .functions.exact import _dsum, _sql_dsum
 from .registry import query
-
-
-def _dsum(col, alias):
-    """Order-independent SUM of a double expression (via exact decimal)."""
-    return F.sum(col.cast("decimal(18,6)")).cast("double").alias(alias)
-
-
-def _sql_dsum(expr, alias):
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .queries import _dsum, _sql_dsum
+from .functions.exact import _dsum, _sql_dsum
 from .registry import query
 
 

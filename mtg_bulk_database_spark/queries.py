@@ -35,16 +35,8 @@ from .functions.text import (
     tokens,
     ts_tokens,
 )
+from .functions.exact import _dsum, _sql_dsum
 from .registry import ORACLE_SQL, QUERIES, query  # noqa: F401  (re-export)
-
-
-def _dsum(col, alias):
-    """Order-independent SUM of a double expression (via exact decimal)."""
-    return F.sum(col.cast("decimal(18,6)")).cast("double").alias(alias)
-
-
-def _sql_dsum(expr, alias):
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
 
 
 # ---------------------------------------------------------------------------

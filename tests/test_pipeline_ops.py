@@ -784,16 +784,27 @@ def test_leakage_safe_split_groups_copies(spark):
 def test_hamming64_rejects_recall_losing_radius(spark):
     """8x8-bit pigeonhole banding is only candidate-complete for
     Hamming <= 7; a larger radius must raise, not silently lose pairs
-    (r4, from r3 advice)."""
+    (r4, from r3 advice) — on the generic band join and on the SimHash
+    path built over it."""
     import pytest as _pytest
 
-    from mtg_bulk_database_spark.operators.dedup import hamming64_near_pairs
+    from mtg_bulk_database_spark.operators.dedup import (
+        hamming64_near_pairs,
+        simhash_near_pairs,
+    )
 
     fp = spark.createDataFrame([(1, 0), (2, -1)], "doc_id long, h long")
-    with _pytest.raises(ValueError, match="max_hamming <= 7"):
-        hamming64_near_pairs(fp, "h", "doc_id", max_hamming=8)
-    # radius 7 still constructs (lazy plan, no error)
-    hamming64_near_pairs(fp, "h", "doc_id", max_hamming=7)
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    for near_pairs in (
+        lambda r: hamming64_near_pairs(fp, "h", "doc_id", max_hamming=r),
+        lambda r: simhash_near_pairs(docs, "text", "doc_id", max_hamming=r),
+    ):
+        with _pytest.raises(ValueError, match="max_hamming <= 7"):
+            near_pairs(8)
+        # radius 7 still constructs (lazy plan, no error)
+        near_pairs(7)
 
 
 def test_tokenizer_locale_free(spark):
