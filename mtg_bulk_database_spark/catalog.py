@@ -12,10 +12,12 @@ storage layer can swap without touching operators.
 
 from __future__ import annotations
 
+import atexit
 import functools
 import inspect
 import logging
 import os
+import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -170,9 +172,10 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     The zip is built fresh in a private temp dir every time (never
     reused from a predictable path — a cached zip could be stale after
     code edits, truncated by an earlier crash, or planted by another
-    local user), and the app is only marked shipped on success so a
-    failed attempt retries. Keyed by applicationId, which is unique per
-    context — ``id()`` would be reusable after GC.
+    local user) and removed when the process exits, and the app is only
+    marked shipped on success so a failed attempt retries. Keyed by
+    applicationId, which is unique per context — ``id()`` would be
+    reusable after GC.
     """
     key = spark.sparkContext.applicationId
     if key in _SHIPPED_APPS:
@@ -183,7 +186,9 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
 
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         pkg_name = os.path.basename(pkg_dir)
-        zpath = os.path.join(tempfile.mkdtemp(prefix="pkgship_"), f"{pkg_name}.zip")
+        ship_dir = tempfile.mkdtemp(prefix="pkgship_")
+        atexit.register(shutil.rmtree, ship_dir, ignore_errors=True)
+        zpath = os.path.join(ship_dir, f"{pkg_name}.zip")
         with zipfile.ZipFile(zpath, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in files:

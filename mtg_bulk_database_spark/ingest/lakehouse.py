@@ -1,38 +1,17 @@
-"""Unified lakehouse seam — ONE verb set dispatched over ``table_format``.
+"""The one table-format switch of the write path.
 
-The engine's mutation verbs (UPSERT / DELETE / versioned read / history)
-exist in three bindings:
+The writers that take a ``table_format`` (``pipeline.ingest_cards_file``,
+``streaming.ingest.stream_upsert_cards``) upsert and read back through
+this module, so it is the only place that knows the format:
 
-- ``"parquet"``  — the directory-swap sink (`sink.merge_upsert`): plain
-  parquet, atomic via rename, no version history.  The default for
-  scratch tables and the closest analog to the reference's plain
-  Postgres table (reference ``import_cards.py:218-221`` ON CONFLICT).
-- ``"ledger"``   — this repo's versioned-manifest format
-  (`ledger.py`): snapshot isolation, min/max file skipping, time
-  travel, CDC diff, vacuum/compaction.  Self-contained, runs anywhere.
-- ``"delta"``    — the PRODUCTION binding onto Delta Lake's
-  transaction log, used when the public ``delta-spark`` package and
-  its jars are on the classpath.  Same verb semantics (MERGE
-  whenMatchedUpdateAll / whenNotMatchedInsertAll == ON CONFLICT DO
-  UPDATE; ``versionAsOf`` == ledger time travel), so callers swap
-  backends with one argument.  This container ships no Delta jars —
-  ``delta_available()`` gates every entry point and the shared test
-  matrix (``tests/test_lakehouse.py``) runs the identical
-  merge/idempotency contract on whichever backends are present.
-- ``"iceberg"``  — same verbs onto Apache Iceberg via its SQL
-  extensions (MERGE INTO / DELETE FROM / VERSION AS OF / the
-  ``.history`` metadata table).  Iceberg addresses CATALOG TABLES, so
-  for this backend the ``path`` argument is a ``catalog.db.table``
-  identifier (strictly validated before SQL splicing) and the session
-  must configure ``spark.sql.catalog.<name>``.  JVM-only integration:
-  ``iceberg_available()`` probes the runtime jar.
-
-Scale: all three bindings bound write amplification the same way —
-only files/partitions that can contain source keys are rewritten
-(parquet: partition pruning; ledger: manifest min/max skipping;
-Delta: data-skipping stats + OPTIMIZE Z-order) — so the choice at
-100 TB is operational (catalog integration, concurrent writers),
-not algorithmic.
+- ``"parquet"`` — the directory-swap sink (`sink.merge_upsert`): plain
+  parquet, atomic via rename, no version history, optionally
+  partitioned so a merge rewrites only the partitions it touches.  The
+  closest analog to the reference's plain Postgres table (reference
+  ``import_cards.py:218-221`` ON CONFLICT).
+- ``"ledger"`` — the versioned-manifest format (`ledger.py`): snapshot
+  isolation, min/max file skipping, time travel, CDC diff and
+  vacuum/compaction, reached through `ledger.py`'s own verbs.
 """
 
 from __future__ import annotations
@@ -43,84 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import ledger, sink
 
-FORMATS = ("parquet", "ledger", "delta", "iceberg")
-
-
-def delta_available(spark: Optional[SparkSession] = None) -> bool:
-    """True when the delta-spark binding can actually execute: the
-    Python package imports AND the JVM classpath carries the Delta
-    classes (either alone is not enough — the pip wheel without jars
-    fails at first use with ClassNotFound)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except Exception:
-        return False
-    if spark is None:
-        return True  # package present; JVM probe needs a session
-    try:
-        jvm = spark._jvm  # noqa: SLF001 — capability probe
-        jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-        return True
-    except Exception:
-        return False
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime jar is on the classpath.
-    Unlike Delta there is no Python package to probe — Iceberg's Spark
-    integration is JVM-only (SQL extensions + a catalog impl)."""
-    try:
-        jvm = spark._jvm  # noqa: SLF001 — capability probe
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def _iceberg_ident(path: str) -> str:
-    """Iceberg addresses CATALOG TABLES, not paths: for
-    ``table_format="iceberg"`` the ``path`` argument is a catalog
-    identifier like ``local.db.events`` (the session must configure
-    ``spark.sql.catalog.<name>``).  Validated strictly — it is spliced
-    into SQL (MERGE INTO has no DataFrame API)."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)+", path):
-        raise ValueError(
-            "iceberg backend expects a catalog identifier "
-            f"(catalog.db.table), got {path!r}"
-        )
-    return path
-
-
-def _iceberg_merge_sql(ident: str, view: str, key: str) -> str:
-    """The exact MERGE text the iceberg binding executes.  Kept as a
-    pure function so the contract test can push the production string
-    through Spark's own SQL parser (parse-only, catalog-free) even in
-    containers without the Iceberg runtime jar."""
-    return (
-        f"MERGE INTO {ident} t USING {view} s ON t.{key} = s.{key} "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
-def _iceberg_delete_sql(ident: str, predicate: str) -> str:
-    return f"DELETE FROM {ident} WHERE {predicate}"
-
-
-def _iceberg_time_travel_sql(ident: str, version: int) -> str:
-    return f"SELECT * FROM {ident} VERSION AS OF {int(version)}"
-
-
-def _require_iceberg(spark: SparkSession) -> None:
-    if not iceberg_available(spark):
-        raise RuntimeError(
-            "table_format='iceberg' requires the iceberg-spark-runtime "
-            "jar (spark.jars.packages=org.apache.iceberg:"
-            "iceberg-spark-runtime-4.0_2.13:<ver>) plus a configured "
-            "spark.sql.catalog.<name>"
-        )
+FORMATS = ("parquet", "ledger")
 
 
 def _require(fmt: str) -> None:
@@ -137,226 +39,27 @@ def merge_upsert_into(
     table_format: str = "parquet",
     partition_by: Optional[str] = None,
 ) -> Optional[int]:
-    """ON CONFLICT(key) DO UPDATE, dispatched by backend.  Returns the
-    committed version for versioned backends (ledger), else None."""
+    """ON CONFLICT(key) DO UPDATE into the table at ``path``.  Returns
+    the committed ledger version, or None for parquet.  A ledger ignores
+    ``partition_by``: its file skipping subsumes the partition-pruned
+    rewrite."""
     _require(table_format)
-    if table_format == "parquet":
-        sink.merge_upsert(
-            spark, path, source, key=key,
-            partition_by=partition_by, order_col=order_col,
-        )
-        return None
     if table_format == "ledger":
         return ledger.ledger_merge_upsert(
             spark, path, source, key=key, order_col=order_col
         )
-    if table_format == "iceberg":
-        return _iceberg_merge_upsert(spark, path, source, key, order_col)
-    return _delta_merge_upsert(spark, path, source, key, order_col)
-
-
-def delete_from(
-    spark: SparkSession,
-    path: str,
-    predicate: str,
-    table_format: str = "parquet",
-) -> Optional[int]:
-    """SQL DELETE semantics (TRUE rows removed; FALSE and NULL kept)."""
-    _require(table_format)
-    if table_format == "ledger":
-        return ledger.ledger_delete(spark, path, predicate)
-    if table_format == "delta":
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(spark, path).delete(predicate)
-        return None
-    if table_format == "iceberg":
-        _require_iceberg(spark)
-        spark.sql(_iceberg_delete_sql(_iceberg_ident(path), predicate))
-        return None
-    # parquet: read-filter-rewrite with the same null semantics
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(path)
-    kept = df.where(F.coalesce(~F.expr(predicate), F.lit(True)))
-    sink._atomic_write(spark, kept, path, None)
+    sink.merge_upsert(
+        spark, path, source, key=key,
+        partition_by=partition_by, order_col=order_col,
+    )
     return None
 
 
 def read_table(
-    spark: SparkSession,
-    path: str,
-    table_format: str = "parquet",
-    version: Optional[int] = None,
+    spark: SparkSession, path: str, table_format: str = "parquet"
 ) -> DataFrame:
-    """Current snapshot, or ``version`` for time travel (versioned
-    backends only)."""
+    """The table's current snapshot."""
     _require(table_format)
     if table_format == "ledger":
-        return ledger.ledger_read(spark, path, version=version)
-    if table_format == "delta":
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", version)
-        return reader.load(path)
-    if table_format == "iceberg":
-        _require_iceberg(spark)
-        ident = _iceberg_ident(path)
-        if version is not None:
-            # iceberg versions are snapshot ids
-            return spark.sql(_iceberg_time_travel_sql(ident, version))
-        return spark.table(ident)
-    if version is not None:
-        raise ValueError("parquet backend has no version history")
+        return ledger.ledger_read(spark, path)
     return spark.read.parquet(path)
-
-
-def table_history(
-    spark: SparkSession, path: str, table_format: str = "ledger"
-) -> DataFrame:
-    """Commit log as a DataFrame (versioned backends only)."""
-    _require(table_format)
-    if table_format == "ledger":
-        return ledger.ledger_history(spark, path)
-    if table_format == "delta":
-        from delta.tables import DeltaTable
-
-        return DeltaTable.forPath(spark, path).history()
-    if table_format == "iceberg":
-        _require_iceberg(spark)
-        return spark.table(f"{_iceberg_ident(path)}.history")
-    raise ValueError("parquet backend has no version history")
-
-
-def _iceberg_merge_upsert(
-    spark: SparkSession,
-    ident: str,
-    source: DataFrame,
-    key: str,
-    order_col: Optional[str],
-) -> None:
-    """Iceberg MERGE INTO with the engine's batch semantics (last-wins
-    dedup first — Iceberg, like Delta, rejects multi-match sources).
-    SQL-based because Iceberg exposes MERGE only through the SQL
-    extensions, not a DataFrame API."""
-    _require_iceberg(spark)
-    ident = _iceberg_ident(ident)
-    deduped = sink._dedup_last_wins(source, key, order_col)
-    if not spark.catalog.tableExists(ident):
-        deduped.writeTo(ident).using("iceberg").create()
-        return
-    # uuid-suffixed view name: a fixed name would let two concurrent
-    # merges in one SparkSession overwrite each other's source view
-    # mid-MERGE (same discipline as sink._atomic_write's temp dirs)
-    import uuid
-
-    view = f"_lakehouse_merge_src_{uuid.uuid4().hex}"
-    deduped.createOrReplaceTempView(view)
-    try:
-        spark.sql(_iceberg_merge_sql(ident, view, key))
-    finally:
-        spark.catalog.dropTempView(view)
-
-
-def _delta_merge_upsert(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    key: str,
-    order_col: Optional[str],
-) -> None:
-    """Delta MERGE with the engine's batch semantics: the source is
-    deduplicated last-wins FIRST (Delta aborts on multiple source
-    matches per target row — the same reason the ledger path dedups),
-    then whenMatchedUpdateAll/whenNotMatchedInsertAll — exactly the
-    reference's ON CONFLICT(id) DO UPDATE."""
-    if not delta_available(spark):
-        raise RuntimeError(
-            "table_format='delta' requires the delta-spark package and "
-            "its jars on the Spark classpath (pip install delta-spark "
-            "+ spark.jars.packages=io.delta:delta-spark_2.13:<ver>)"
-        )
-    from delta.tables import DeltaTable
-
-    deduped = sink._dedup_last_wins(source, key, order_col)
-    if not DeltaTable.isDeltaTable(spark, path):
-        deduped.write.format("delta").mode("errorifexists").save(path)
-        return
-    (
-        DeltaTable.forPath(spark, path)
-        .alias("t")
-        .merge(deduped.alias("s"), f"t.{key} = s.{key}")
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
-def execute_merge_sql(
-    spark: SparkSession,
-    sql_text: str,
-    ident_paths: dict,
-    order_col: Optional[str] = None,
-) -> int:
-    """EXECUTE the exact ``MERGE INTO`` text the Iceberg binding emits
-    (``_iceberg_merge_sql``), against the path-addressed LEDGER backend
-    — the jarless container's execution twin for the SQL surface that
-    r5 could only parser-validate.
-
-    The statement is parsed by SPARK'S OWN SQL PARSER (never regexed):
-    the resulting ``MergeIntoTable`` plan must carry exactly the
-    binding's shape — an equi-join merge condition on one key,
-    ``WHEN MATCHED THEN UPDATE SET *``, ``WHEN NOT MATCHED THEN
-    INSERT *``, nothing else — and its components drive the dispatch:
-    the target identifier resolves to a ledger root through
-    ``ident_paths`` (same strict identifier contract as
-    ``_iceberg_ident``), the source relation resolves through the
-    session catalog (the temp view the binding registers), and the key
-    comes from the merge condition's attribute.  Anything outside that
-    shape raises rather than silently approximating, so this twin can
-    only ever execute semantics the Iceberg leg would.
-
-    Returns the committed ledger version, like ``ledger_merge_upsert``.
-    """
-    parser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
-    plan = parser.parsePlan(sql_text)
-    if plan.getClass().getSimpleName() != "MergeIntoTable":
-        raise ValueError(f"not a MERGE statement: {sql_text!r}")
-
-    def _ident(rel) -> str:
-        if rel.getClass().getSimpleName() == "SubqueryAlias":
-            rel = rel.child()
-        if rel.getClass().getSimpleName() != "UnresolvedRelation":
-            raise ValueError("MERGE relation is not a plain table/view")
-        return rel.multipartIdentifier().mkString(".")
-
-    target = _ident(plan.targetTable())
-    source_name = _ident(plan.sourceTable())
-    cond = plan.mergeCondition()
-    if cond.getClass().getSimpleName() != "EqualTo":
-        raise ValueError(f"unsupported merge condition: {cond.sql()}")
-    left = cond.left().nameParts()
-    right = cond.right().nameParts()
-    key_l = left.apply(left.size() - 1)
-    key_r = right.apply(right.size() - 1)
-    if key_l != key_r:
-        raise ValueError(
-            f"merge condition keys differ: {key_l!r} vs {key_r!r}"
-        )
-    ma, nma = plan.matchedActions(), plan.notMatchedActions()
-    if not (
-        ma.size() == 1
-        and ma.head().getClass().getSimpleName() == "UpdateStarAction"
-        and nma.size() == 1
-        and nma.head().getClass().getSimpleName() == "InsertStarAction"
-        and plan.notMatchedBySourceActions().size() == 0
-    ):
-        raise ValueError(
-            "only the binding's UPDATE SET * / INSERT * shape is executable"
-        )
-    if target not in ident_paths:
-        raise ValueError(f"no ledger path registered for {target!r}")
-    source = spark.table(source_name)
-    return ledger.ledger_merge_upsert(
-        spark, ident_paths[target], source, key=key_l, order_col=order_col
-    )

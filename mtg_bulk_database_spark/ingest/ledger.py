@@ -49,7 +49,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sink import _dedup_last_wins
+from .sink import _dedup_last_wins, _upsert_rows
 
 _LEDGER_DIR = "_ledger"
 _DATA_DIR = "data"
@@ -391,8 +391,7 @@ def ledger_merge_upsert(
             old = spark.read.option("mergeSchema", "true").parquet(
                 *[os.path.join(root, e["path"]) for e in touched]
             )
-            keep = old.join(source, on=key, how="left_anti")
-            merged = keep.unionByName(source, allowMissingColumns=True)
+            merged = _upsert_rows(old, source, key)
         else:
             merged = source
         new_files = _stage_data_files(

@@ -13,6 +13,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.scryfall import read_cards_json, read_sets_dataframe
+from .lakehouse import merge_upsert_into, read_table
 from .sink import merge_upsert, should_refresh, write_watermark
 from .transform import prepare_cards, prepare_sets
 
@@ -30,23 +31,17 @@ def ingest_cards_file(
     with the per-set analytics join (Q10). Returns the prepared frame
     (lazily re-readable from the table path).
 
-    ``table_format="ledger"`` commits through the versioned-manifest
-    format instead (``ingest/ledger.py``): snapshot-isolated readers and
-    min/max file skipping replace the directory swap — the Delta-shaped
-    path; ``partition_by`` is ignored there (file skipping subsumes the
-    partition-pruned rewrite).
+    ``table_format`` picks the table format through
+    ``ingest/lakehouse.py``; ``"ledger"`` commits a versioned-manifest
+    snapshot instead of the directory swap and ignores ``partition_by``.
     """
     raw = read_cards_json(spark, src_path)
     prepared = prepare_cards(raw, strict_layout=strict_layout)
-    if table_format == "ledger":
-        from .ledger import ledger_merge_upsert, ledger_read
-
-        ledger_merge_upsert(spark, table_path, prepared, key="id")
-        return ledger_read(spark, table_path)
-    if table_format != "parquet":
-        raise ValueError(f"unknown table format: {table_format!r}")
-    merge_upsert(spark, table_path, prepared, key="id", partition_by=partition_by)
-    return spark.read.parquet(table_path)
+    merge_upsert_into(
+        spark, table_path, prepared, key="id",
+        table_format=table_format, partition_by=partition_by,
+    )
+    return read_table(spark, table_path, table_format)
 
 
 def ingest_sets(

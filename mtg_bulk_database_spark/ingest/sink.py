@@ -2,17 +2,17 @@
 batched ``INSERT ... ON CONFLICT (id) DO UPDATE`` sink
 (``import_cards.py:214-255``, SURVEY §2.4 K1-K4).
 
-Three targets, one semantics (key-match → update all columns, no match →
-insert; idempotent by construction):
+One semantics (key-match → update all columns, no match → insert;
+idempotent by construction), written once in :func:`_upsert_rows`:
 
-1. ``merge_upsert``      — engine-native parquet table. Anti-join the
+1. ``merge_upsert`` — the ``"parquet"`` table format. Anti-join the
    target against the source keys, union the new source rows, atomic
-   directory swap. On Delta/Iceberg this is literally ``MERGE INTO``
-   (whenMatchedUpdateAll/whenNotMatchedInsertAll) with file-level
-   pruning; the parquet emulation keeps identical semantics for
-   environments without a table format. Partition the table (e.g. by
-   ``set``) so a merge only rewrites partitions that contain source
-   keys — bounded write amplification at 100 TB.
+   directory swap. Partition the table (e.g. by ``set``) so a merge
+   only rewrites partitions that contain source keys — bounded write
+   amplification at 100 TB. The other table format, the versioned
+   ledger (``ledger.py``), applies the same rule to the files whose
+   key range overlaps the source; ``lakehouse.py`` is the one switch
+   between the two.
 2. ``jdbc_stage_merge_sql`` — the OLTP bridge (per the north star
    "Spark JDBC + DataFrame ops"): bulk-write a staging table via
    ``df.write.jdbc(batchsize=1000)`` (the reference's
@@ -81,10 +81,17 @@ def merge_upsert(
         _merge_into_partitions(spark, target_path, source, key, partition_by)
         return
 
-    target = spark.read.parquet(target_path)
-    keep = target.join(source, on=key, how="left_anti")
-    merged = keep.unionByName(source, allowMissingColumns=True)
+    merged = _upsert_rows(spark.read.parquet(target_path), source, key)
     _atomic_write(spark, merged, target_path, partition_by)
+
+
+def _upsert_rows(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
+    """The merge rule: every source row, plus the target rows whose key
+    the source does not carry (columns missing on either side are
+    NULL)."""
+    return target.join(source, on=key, how="left_anti").unionByName(
+        source, allowMissingColumns=True
+    )
 
 
 def _merge_into_partitions(
@@ -109,8 +116,8 @@ def _merge_into_partitions(
     FORWARD (staged data is complete by construction). Each merge calls
     recovery first, so a crashed predecessor self-heals. The remaining
     non-atomicity is a reader racing the swap seeing one partition
-    briefly absent — closing that needs a real table format (Delta /
-    Iceberg), the documented production path in ARCHITECTURE.md.
+    briefly absent — closing that needs a versioned table format, the
+    ``"ledger"`` format (``ledger.py``).
 
     Source rows with a NULL partition value can't be pruned to a
     directory, so their presence falls back to the whole-table merge
@@ -123,17 +130,14 @@ def _merge_into_partitions(
     """
     recover_partition_merge(target_path)
     part_vals = [r[0] for r in source.select(partition_by).distinct().collect()]
+    target = spark.read.parquet(target_path)
     if any(v is None for v in part_vals):
-        target = spark.read.parquet(target_path)
-        keep = target.join(source, on=key, how="left_anti")
-        merged = keep.unionByName(source, allowMissingColumns=True)
+        merged = _upsert_rows(target, source, key)
         _atomic_write(spark, merged, target_path, partition_by)
         return
 
-    target = spark.read.parquet(target_path)
     affected = target.filter(F.col(partition_by).isin(part_vals))
-    keep = affected.join(source, on=key, how="left_anti")
-    merged = keep.unionByName(source, allowMissingColumns=True)
+    merged = _upsert_rows(affected, source, key)
 
     # repartition on the partition key: without it every shuffle
     # partition writes a sliver into every partition directory

@@ -425,7 +425,6 @@ def _mv_state(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    root = tempfile.mkdtemp(prefix="mtg_mv_ledger_")
     # v1: 90% of the docs, with n_chars deliberately zeroed for the
     # doc_id%7 slice — v2 must fix those via UPDATE and add the
     # missing 10% via INSERT, landing exactly on the true table
@@ -433,18 +432,21 @@ def _mv_state(spark, sf_dir):
         "n_chars",
         F.when(F.col("doc_id") % 7 == 0, F.lit(0)).otherwise(F.col("n_chars")),
     )
-    ledger_write(spark, root, v1, key="doc_id")
-    group, sums = ["source"], {"total_chars": "n_chars"}
-    state = maintain_view(spark, root, None, 0, 1, group, sums).localCheckpoint(
-        eager=True
-    )
     batch = docs.filter(
         (F.col("doc_id") % 10 == 0) | (F.col("doc_id") % 7 == 0)
     )
-    v2 = ledger_merge_upsert(spark, root, batch, key="doc_id")
-    return maintain_view(
-        spark, root, state, 1, v2, group, sums
-    ).localCheckpoint(eager=True)
+    group, sums = ["source"], {"total_chars": "n_chars"}
+    # both view states are eagerly checkpointed, so nothing reads the
+    # ledger once this block ends
+    with tempfile.TemporaryDirectory(prefix="mtg_mv_ledger_") as root:
+        ledger_write(spark, root, v1, key="doc_id")
+        state = maintain_view(
+            spark, root, None, 0, 1, group, sums
+        ).localCheckpoint(eager=True)
+        v2 = ledger_merge_upsert(spark, root, batch, key="doc_id")
+        return maintain_view(
+            spark, root, state, 1, v2, group, sums
+        ).localCheckpoint(eager=True)
 
 
 @query(

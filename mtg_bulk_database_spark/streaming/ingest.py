@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ingest.lakehouse import _require, merge_upsert_into, read_table
 from ..ingest.transform import prepare_cards
 from ..schemas import CARDS_RAW_SCHEMA
 
@@ -137,8 +138,8 @@ def stream_ingest_cards(
 
     Note: the streaming sink is append-only; upsert semantics at the
     table level come from compacting with ``ingest.sink.merge_upsert``
-    (or, in production, a ``foreachBatch`` Delta MERGE — same transform
-    layer, exactly-once via the checkpoint).
+    or from :func:`stream_upsert_cards` (``foreachBatch`` upsert — same
+    transform layer, exactly-once via the checkpoint).
     """
     prepared = prepare_cards(
         _file_stream(spark, landing_dir, CARDS_RAW_SCHEMA, "json")
@@ -164,43 +165,34 @@ def stream_upsert_cards(
     table_format: str = "parquet",
 ) -> DataFrame:
     """Streaming MERGE sink: each micro-batch upserts into the target
-    table via ``foreachBatch`` + ``merge_upsert`` — table-level upsert
+    table via ``foreachBatch`` + ``merge_upsert_into`` — table-level upsert
     semantics on a stream (re-landed/corrected card files UPDATE rows
     instead of appending duplicates).
 
     Exactly-once composition: the checkpoint makes batch delivery
     at-least-once, and the upsert is idempotent on ``key``, so replayed
     batches converge to the same table — the same argument Delta's
-    ``foreachBatch`` MERGE pattern makes in production (swap the body
-    for ``deltaTable.merge``; the stream wiring is unchanged).
+    ``foreachBatch`` MERGE pattern makes.
 
-    ``table_format="ledger"`` is the snapshot-isolated sink: every
-    micro-batch commits a new ledger version, so downstream readers
-    never observe a half-applied batch (the local ledger stands in for
-    the Delta log).
+    ``table_format`` picks the table format through
+    ``ingest/lakehouse.py``; with ``"ledger"`` every micro-batch commits
+    a new ledger version, so downstream readers never observe a
+    half-applied batch.
     """
-    if table_format == "ledger":
-        from ..ingest.ledger import ledger_merge_upsert as upsert
-    elif table_format == "parquet":
-        from ..ingest.sink import merge_upsert as upsert
-    else:
-        raise ValueError(f"unknown table format: {table_format!r}")
-
+    _require(table_format)
     prepared = prepare_cards(
         _file_stream(spark, landing_dir, CARDS_RAW_SCHEMA, "json")
     )
     _drain(
         prepared.writeStream.foreachBatch(
-            lambda batch_df, _: upsert(spark, table_path, batch_df, key=key)
+            lambda batch_df, _: merge_upsert_into(
+                spark, table_path, batch_df, key=key, table_format=table_format
+            )
         ).option("checkpointLocation", checkpoint_dir),
         timeout_s,
         f"stream_upsert_cards of {landing_dir!r}",
     )
-    if table_format == "ledger":
-        from ..ingest.ledger import ledger_read
-
-        return ledger_read(spark, table_path)
-    return spark.read.parquet(table_path)
+    return read_table(spark, table_path, table_format)
 
 
 def stream_fold_cms(

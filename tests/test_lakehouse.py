@@ -1,10 +1,8 @@
-"""One merge/idempotency contract, every backend: the lakehouse seam
-(`ingest/lakehouse.py`) must give byte-identical table contents for the
-same op sequence on "parquet", "ledger", and — when its jars are on the
-classpath — "delta" and "iceberg".  Those legs self-skip in jarless
-containers (this sandbox) and run unchanged in a production image; the
-OTHER legs prove the dispatcher + semantics, so a backend swap is one
-argument.
+"""One merge/idempotency contract for both table formats: the lakehouse
+seam (`ingest/lakehouse.py`) must give identical table contents for the
+same op sequence on "parquet" and "ledger", and every writer that takes a
+``table_format`` must reject an unknown one through it before any work
+starts.
 """
 
 from __future__ import annotations
@@ -13,31 +11,8 @@ import pytest
 from pyspark.sql import Row
 
 from mtg_bulk_database_spark.ingest import lakehouse
-
-BACKENDS = [
-    "parquet",
-    "ledger",
-    pytest.param(
-        "delta",
-        marks=pytest.mark.skipif(
-            not lakehouse.delta_available(),
-            reason="delta-spark not on classpath in this container",
-        ),
-    ),
-    # iceberg's availability probe needs a live session, so its skip is
-    # decided inside _target (identifier-addressed, not path-addressed)
-    "iceberg",
-]
-
-
-def _target(spark, tmp_path, fmt, name):
-    """Backend-appropriate table address: a filesystem path for the
-    file backends, a catalog identifier for iceberg."""
-    if fmt == "iceberg":
-        if not lakehouse.iceberg_available(spark):
-            pytest.skip("iceberg runtime jar not on classpath")
-        return f"local.db.{name}"
-    return str(tmp_path / name)
+from mtg_bulk_database_spark.ingest.pipeline import ingest_cards_file
+from mtg_bulk_database_spark.streaming.ingest import stream_upsert_cards
 
 
 def _rows(spark, pairs):
@@ -49,9 +24,9 @@ def _contents(spark, path, fmt):
     return sorted((r["id"], r["v"]) for r in df.collect())
 
 
-@pytest.mark.parametrize("fmt", BACKENDS)
+@pytest.mark.parametrize("fmt", lakehouse.FORMATS)
 def test_merge_upsert_contract(spark, tmp_path, fmt):
-    path = _target(spark, tmp_path, fmt, f"t_{fmt}")
+    path = str(tmp_path / f"t_{fmt}")
     # create
     lakehouse.merge_upsert_into(
         spark, path, _rows(spark, [(1, "a"), (2, "b")]), table_format=fmt
@@ -69,9 +44,9 @@ def test_merge_upsert_contract(spark, tmp_path, fmt):
     assert _contents(spark, path, fmt) == [(1, "a"), (2, "B"), (3, "c")]
 
 
-@pytest.mark.parametrize("fmt", BACKENDS)
+@pytest.mark.parametrize("fmt", lakehouse.FORMATS)
 def test_merge_last_wins_within_batch(spark, tmp_path, fmt):
-    path = _target(spark, tmp_path, fmt, f"lw_{fmt}")
+    path = str(tmp_path / f"lw_{fmt}")
     src = spark.createDataFrame(
         [Row(id=1, v="old", seq=1), Row(id=1, v="new", seq=2)]
     )
@@ -82,174 +57,25 @@ def test_merge_last_wins_within_batch(spark, tmp_path, fmt):
     assert [(r["id"], r["v"]) for r in df.collect()] == [(1, "new")]
 
 
-@pytest.mark.parametrize("fmt", BACKENDS)
-def test_delete_null_semantics(spark, tmp_path, fmt):
-    # TRUE rows go; FALSE and NULL-predicate rows stay (SQL DELETE)
-    path = _target(spark, tmp_path, fmt, f"d_{fmt}")
-    src = spark.createDataFrame(
-        [Row(id=1, v="x"), Row(id=2, v=None), Row(id=3, v="y")]
-    )
-    lakehouse.merge_upsert_into(spark, path, src, table_format=fmt)
-    lakehouse.delete_from(spark, path, "v = 'x'", table_format=fmt)
-    df = lakehouse.read_table(spark, path, table_format=fmt)
-    assert sorted(r["id"] for r in df.collect()) == [2, 3]
-
-
-def test_ledger_time_travel_via_seam(spark, tmp_path):
-    path = str(tmp_path / "tt")
-    lakehouse.merge_upsert_into(
-        spark, path, _rows(spark, [(1, "a")]), table_format="ledger"
-    )
-    v2 = lakehouse.merge_upsert_into(
-        spark, path, _rows(spark, [(1, "A2")]), table_format="ledger"
-    )
-    assert v2 == 2
-    old = lakehouse.read_table(spark, path, table_format="ledger", version=1)
-    assert [(r["id"], r["v"]) for r in old.collect()] == [(1, "a")]
-    hist = lakehouse.table_history(spark, path, table_format="ledger")
-    assert hist.count() == 2
-
-
-def test_parquet_backend_rejects_versions(spark, tmp_path):
-    path = str(tmp_path / "pq")
-    lakehouse.merge_upsert_into(
-        spark, path, _rows(spark, [(1, "a")]), table_format="parquet"
-    )
-    with pytest.raises(ValueError, match="no version history"):
-        lakehouse.read_table(spark, path, table_format="parquet", version=1)
+def test_unknown_format_raises_before_any_work(spark, tmp_path):
+    """The seam, the batch ingest and the streaming upsert all refuse an
+    unknown format with ValueError; nothing is written and no stream is
+    left running."""
+    table = tmp_path / "t"
     with pytest.raises(ValueError, match="unknown table_format"):
         lakehouse.merge_upsert_into(
-            spark, path, _rows(spark, [(1, "a")]), table_format="hudi"
+            spark, str(table), _rows(spark, [(1, "a")]), table_format="hudi"
         )
-
-
-def test_delta_unavailable_is_explicit(spark, tmp_path):
-    if lakehouse.delta_available(spark):
-        pytest.skip("delta present: covered by the parametrized matrix")
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        lakehouse.merge_upsert_into(
-            spark,
-            str(tmp_path / "dl"),
-            _rows(spark, [(1, "a")]),
-            table_format="delta",
+    raw = tmp_path / "cards.json"
+    raw.write_text("[]")
+    with pytest.raises(ValueError, match="unknown table_format"):
+        ingest_cards_file(spark, str(raw), str(table), table_format="hudi")
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    with pytest.raises(ValueError, match="unknown table_format"):
+        stream_upsert_cards(
+            spark, str(landing), str(table), str(tmp_path / "ckpt"),
+            table_format="hudi",
         )
-
-
-def test_iceberg_unavailable_is_explicit(spark):
-    if lakehouse.iceberg_available(spark):
-        pytest.skip("iceberg present: covered by the parametrized matrix")
-    with pytest.raises(RuntimeError, match="iceberg"):
-        lakehouse.merge_upsert_into(
-            spark, "local.db.t", _rows(spark, [(1, "a")]),
-            table_format="iceberg",
-        )
-
-
-def test_iceberg_identifier_validation():
-    from mtg_bulk_database_spark.ingest.lakehouse import _iceberg_ident
-
-    assert _iceberg_ident("local.db.events") == "local.db.events"
-    for bad in ("/tmp/path", "a", "a.b; DROP TABLE x", "a..b", "1a.b"):
-        with pytest.raises(ValueError, match="catalog identifier"):
-            _iceberg_ident(bad)
-
-
-def test_iceberg_sql_parses_in_sparks_own_parser(spark):
-    """r5 (judge directive): the Iceberg runtime jar isn't shippable in
-    this container, so the MERGE/DELETE/time-travel legs of the matrix
-    self-skip — but the SQL TEXT the binding would execute can still be
-    pushed through Spark's own SQL parser (parse-only: grammar check,
-    no catalog or jar needed).  Validates the exact production strings
-    and pins their logical-plan node types, so a typo in the splice
-    templates fails here, not at a customer's Iceberg deployment."""
-    from mtg_bulk_database_spark.ingest.lakehouse import (
-        _iceberg_delete_sql,
-        _iceberg_merge_sql,
-        _iceberg_time_travel_sql,
-    )
-
-    parser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
-
-    def plan_class(sql: str) -> str:
-        return parser.parsePlan(sql).getClass().getSimpleName()
-
-    merge = _iceberg_merge_sql("local.db.events", "_src_view_abc", "event_id")
-    assert plan_class(merge) == "MergeIntoTable"
-    # star-actions must survive parsing as UPDATE SET * / INSERT *
-    assert "UPDATE SET *" in merge and "INSERT *" in merge
-
-    delete = _iceberg_delete_sql("local.db.events", "value IS NULL OR value > 5")
-    assert plan_class(delete) == "DeleteFromTable"
-
-    tt = _iceberg_time_travel_sql("local.db.events", 42)
-    # VERSION AS OF parses into a time-travel relation carrying 42
-    plan = parser.parsePlan(tt)
-    assert plan.getClass().getSimpleName() == "Project"
-    assert "RelationTimeTravel" in plan.toString() and "42" in plan.toString()
-
-    # the guard behind all of this is real: malformed text must raise
-    with pytest.raises(Exception, match="PARSE_SYNTAX_ERROR"):
-        parser.parsePlan("MERGE INTO local.db.t t USING s ON")
-
-
-def test_merge_sql_text_executes_on_ledger(spark, tmp_path):
-    """r6 (judge directive #6): the production MERGE INTO text is now
-    EXECUTED, not just parsed — `execute_merge_sql` pushes the exact
-    `_iceberg_merge_sql` string through Spark's parser, verifies the
-    UPDATE SET * / INSERT * shape, and dispatches the parsed
-    (target, source view, key) onto the ledger backend. The result
-    must equal the ledger-native merge run side by side, upsert
-    semantics and idempotency included."""
-    from mtg_bulk_database_spark.ingest import ledger
-    from mtg_bulk_database_spark.ingest.lakehouse import (
-        _iceberg_merge_sql,
-        execute_merge_sql,
-    )
-
-    root_sql = str(tmp_path / "via_sql")
-    root_native = str(tmp_path / "native")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20)], "id long, name string, v long"
-    )
-    ledger.ledger_merge_upsert(spark, root_sql, base, key="id")
-    ledger.ledger_merge_upsert(spark, root_native, base, key="id")
-
-    batch = spark.createDataFrame(
-        [(2, "B", 21), (3, "c", 30)], "id long, name string, v long"
-    )
-    batch.createOrReplaceTempView("_merge_src_test")
-    sql = _iceberg_merge_sql("lake.db.events", "_merge_src_test", "id")
-    try:
-        v1 = execute_merge_sql(
-            spark, sql, {"lake.db.events": root_sql}
-        )
-        ledger.ledger_merge_upsert(spark, root_native, batch, key="id")
-
-        got = sorted(ledger.ledger_read(spark, root_sql).collect())
-        want = sorted(ledger.ledger_read(spark, root_native).collect())
-        assert got == want
-        assert {tuple(r) for r in got} == {
-            (1, "a", 10), (2, "B", 21), (3, "c", 30)
-        }
-
-        # idempotency: re-executing the same SQL commits a new version
-        # with identical content (same contract as the native path)
-        v2 = execute_merge_sql(spark, sql, {"lake.db.events": root_sql})
-        assert v2 > v1
-        again = sorted(ledger.ledger_read(spark, root_sql).collect())
-        assert again == got
-
-        # the shape guard is real: a non-binding MERGE must refuse
-        import pytest as _pytest
-
-        bad = (
-            "MERGE INTO lake.db.events t USING _merge_src_test s "
-            "ON t.id = s.id WHEN MATCHED THEN DELETE"
-        )
-        with _pytest.raises(ValueError, match="UPDATE SET"):
-            execute_merge_sql(spark, bad, {"lake.db.events": root_sql})
-        unknown = _iceberg_merge_sql("other.db.t", "_merge_src_test", "id")
-        with _pytest.raises(ValueError, match="no ledger path"):
-            execute_merge_sql(spark, unknown, {"lake.db.events": root_sql})
-    finally:
-        spark.catalog.dropTempView("_merge_src_test")
+    assert spark.streams.active == []
+    assert not table.exists()

@@ -254,3 +254,20 @@ def test_hll_maintenance_matches_recompute(spark, root):
         )
         assert _est(state) == sorted((r["grp"], r["d"]) for r in exact.collect())
 
+
+
+def test_mv_state_leaves_no_temp_dir(spark, monkeypatch, tmp_path):
+    """q105's ledger build lives in a temporary directory that is gone
+    when the view state is returned, and the state still reads the same
+    rows as the memoized build."""
+    import tempfile
+
+    from mtg_bulk_database_spark.pipeline_queries4 import _mv_state
+
+    from tests.conftest import SF_CORRECTNESS
+
+    want = _rows(_mv_state(spark, SF_CORRECTNESS))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = _rows(_mv_state.__wrapped__(spark, SF_CORRECTNESS))
+    assert list(tmp_path.iterdir()) == []
+    assert got == want
