@@ -71,17 +71,24 @@ def merge_upsert(
     MERGE does from the transaction log); untouched partitions are never
     scanned or copied, which bounds write amplification at 100 TB.
     """
-    source = _dedup_last_wins(source, key, order_col)
+    deduped = _dedup_last_wins(source, key, order_col)
 
     if not _table_exists(target_path):
-        _atomic_write(spark, source, target_path, partition_by)
+        _atomic_write(spark, deduped, target_path, partition_by)
         return
 
     if partition_by:
-        _merge_into_partitions(spark, target_path, source, key, partition_by)
+        # the partition-value probe reads the source BEFORE the dedup:
+        # with the partition column stable per key, dropping duplicate
+        # keys cannot change the set of values, so the probe skips the
+        # dedup's window shuffle
+        part_vals = [r[0] for r in source.select(partition_by).distinct().collect()]
+        _merge_into_partitions(
+            spark, target_path, deduped, key, partition_by, part_vals
+        )
         return
 
-    merged = _upsert_rows(spark.read.parquet(target_path), source, key)
+    merged = _upsert_rows(spark.read.parquet(target_path), deduped, key)
     _atomic_write(spark, merged, target_path, partition_by)
 
 
@@ -100,8 +107,10 @@ def _merge_into_partitions(
     source: DataFrame,
     key: str,
     partition_by: str,
+    part_vals: list,
 ) -> None:
-    """Partition-pruned merge: anti-join only the affected partitions,
+    """Partition-pruned merge: anti-join only the affected partitions
+    (``part_vals``, the source's distinct partition values),
     stage their merged contents to a temp subtree, then swap the
     affected partition directories one by one.
 
@@ -129,7 +138,6 @@ def _merge_into_partitions(
     the match condition includes the partition column.
     """
     recover_partition_merge(target_path)
-    part_vals = [r[0] for r in source.select(partition_by).distinct().collect()]
     target = spark.read.parquet(target_path)
     if any(v is None for v in part_vals):
         merged = _upsert_rows(target, source, key)

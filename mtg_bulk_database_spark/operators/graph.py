@@ -26,7 +26,7 @@ Implementation: two-mode, sized to the graph.
   near-dup pair graph of a few thousand edges costs 3-6 s of empty-task
   rounds for microseconds of actual work. Below ``local_threshold``
   edges the operator collects ONCE and runs union-find (O(E·α)), then
-  parallelizes (node, component) back. This is the same move the
+  ships (node, component) back as an Arrow table. This is the same move the
   MapReduce-CC literature makes ("finish the contracted graph locally");
   the threshold bounds driver memory explicitly (2M edges ≈ 32 MB of
   longs). Set ``local_threshold=0`` to force the distributed path.
@@ -34,6 +34,7 @@ Implementation: two-mode, sized to the graph.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -228,21 +229,17 @@ def connected_components(
         # both (a,b) and (b,a) are present; union-find needs each edge once
         rows = edges.filter(F.col("src") < F.col("dst")).collect()
         comp = _local_components([(r["src"], r["dst"]) for r in rows])
-        # explicit slice count: the default createDataFrame path cuts a
-        # small result into defaultParallelism (32+) python-pickled
-        # slices — ~0.5 s of empty-task overhead per call on a result
-        # that is usually a few hundred rows. One slice per 100k rows
-        # keeps the ship cheap while never bottlenecking a big tail.
-        slices = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                len(comp) // 100_000 + 1,
-            ),
-        )
-        rdd = spark.sparkContext.parallelize(comp, slices)
+        # ship the tail as an Arrow table: the JVM reads it straight
+        # into a relation, with no Python-worker stage per call
+        pa_type = pa.int64() if numeric else pa.string()
+        nodes, roots = zip(*comp) if comp else ((), ())
         return spark.createDataFrame(
-            rdd, f"node {id_type}, component {id_type}"
+            pa.table(
+                {
+                    "node": pa.array(nodes, pa_type),
+                    "component": pa.array(roots, pa_type),
+                }
+            )
         )
 
     labels = edges.select("src").distinct().withColumn("component", F.col("src"))

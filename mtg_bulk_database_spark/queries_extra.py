@@ -6,6 +6,7 @@ oracle-paired coverage.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from .catalog import _session_memo, load_table
@@ -294,14 +295,19 @@ def scale_exact_percentile_plan(spark, li):
         histogram="footer",  # pass-1 from parquet row-group stats
     )
     qty, price = pct["l_quantity"], pct["l_extendedprice"]
-    rows = [
-        (g, qty[g][0.25], qty[g][0.50], qty[g][0.75], price[g][0.9])
-        for g in sorted(qty)
-    ]
+    # an Arrow table, not a Python list: the JVM reads it straight into
+    # a relation, with no Python-worker stage
+    flags = sorted(qty)
     return spark.createDataFrame(
-        rows,
-        "l_returnflag string, p25 double, p50 double, p75 double, "
-        "price_p90 double",
+        pa.table(
+            {
+                "l_returnflag": pa.array(flags, pa.string()),
+                "p25": pa.array([qty[g][0.25] for g in flags], pa.float64()),
+                "p50": pa.array([qty[g][0.50] for g in flags], pa.float64()),
+                "p75": pa.array([qty[g][0.75] for g in flags], pa.float64()),
+                "price_p90": pa.array([price[g][0.9] for g in flags], pa.float64()),
+            }
+        )
     )
 
 

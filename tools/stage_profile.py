@@ -16,6 +16,12 @@ re-runs it and reports, per NEW stage, from Spark's status REST API
     skew     — max/median task run time (>> 1 = a hot key or an
                unsplittable file is serializing the stage)
 
+and, for the whole profiled run, the Janino compiles of generated code
+(class count from ``CodegenMetrics``, compile ms from
+``CodeGenerator.compileTime``). A warm run should compile nothing; a
+non-zero count there means the session's codegen cache
+(``spark.sql.codegen.cache.maxEntries``) is smaller than the working set.
+
 Reading the output at 100 TB design altitude: the top stage's
 `shuffle` column is the term that scales with data; `skew` is the term
 that scales with key distribution; `spill` is the term that pages to
@@ -46,6 +52,17 @@ def _fmt_bytes(n: float) -> str:
             return f"{n:.0f}{unit}"
         n /= 1024
     return f"{n:.0f}PB"
+
+
+def _codegen_totals(spark) -> tuple[int, float]:
+    """JVM-wide (classes compiled, compile ms) so far."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        generator.compileTime() / 1e6,
+    )
 
 
 def profile(name: str, sf_dir: str, warm: bool = True) -> list[dict]:
@@ -79,9 +96,11 @@ def profile(name: str, sf_dir: str, warm: bool = True) -> list[dict]:
         fn(spark, sf_dir).count()
 
     seen = {s["stageId"] for s in _get(f"{base}/stages")}
+    classes0, compile_ms0 = _codegen_totals(spark)
     t0 = time.perf_counter()
     fn(spark, sf_dir).count()
     wall = time.perf_counter() - t0
+    classes1, compile_ms1 = _codegen_totals(spark)
 
     stages = [
         s
@@ -116,6 +135,10 @@ def profile(name: str, sf_dir: str, warm: bool = True) -> list[dict]:
     rows.sort(key=lambda r: -r["run_ms"])
 
     print(f"\n{name} @ {sf_dir}: wall {wall:.2f}s, {len(rows)} stages")
+    print(
+        f"codegen: {classes1 - classes0} classes compiled, "
+        f"{compile_ms1 - compile_ms0:.0f} ms"
+    )
     hdr = f"{'stage':>5} {'tasks':>5} {'run':>8} {'in':>8} {'shufW':>8} {'spill':>8} {'skew':>5}  name"
     print(hdr)
     print("-" * len(hdr))
